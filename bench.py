@@ -608,8 +608,8 @@ def main() -> None:
 
     def _near_dup_cap_off(sp, sf_dir):
         # A/B twin of sim_near_dup with the skew cap DISABLED, so the
-        # cap machinery's cost (groupBy + window + broadcast anti-join
-        # before the bucket self-join) is attributed to code, not host
+        # cap machinery's cost (groupBy + window + hot-key filter before
+        # the bucket scoring) is attributed to code, not host
         # weather; sim_near_dup itself is the cap-ON measurement
         import __spark_entry__ as em
         from livre_spark.functions import similarity as qsim
@@ -865,7 +865,7 @@ steal cannot inflate; "raw" is directly comparable to earlier rounds:
 ``sim_near_dup`` is the cap-ON measurement (the registered query, skew
 cap active); ``sim_near_dup_cap_off`` is its A/B twin with the cap
 disabled, so the cap machinery's cost (bucket-count groupBy + window +
-broadcast anti-join ahead of the self-join) is attributed to code
+hot-key filter ahead of the bucket scoring) is attributed to code
 rather than host weather.
 """ + _anchor_md(result.get("drift_anchor"))
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)

@@ -14,9 +14,12 @@ single scan (no shuffle); the LSH path shuffles once on the bucket key.
 from __future__ import annotations
 
 import math
-import os
 import random
+from decimal import ROUND_HALF_UP, Decimal
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -56,6 +59,48 @@ def _query_literal(query_vec: list[float]) -> Column:
     return F.array(*[F.lit(float(v)) for v in query_vec])
 
 
+def _seq_fold(a, b):
+    """Row-wise ``(dot, |a|^2, |b|^2)`` of two ``(n, d)`` float64
+    matrices, accumulated column by column: every row sees one IEEE
+    multiply and one IEEE add per element in array order - the same
+    operation sequence as the SQL ``aggregate`` fold and DuckDB's
+    ``list_dot_product``, so the results are bit-identical to both."""
+    n = a.shape[0]
+    dot, na, nb = np.zeros(n), np.zeros(n), np.zeros(n)
+    for k in range(a.shape[1]):
+        x, y = a[:, k], b[:, k]
+        dot = dot + x * y
+        na = na + x * x
+        nb = nb + y * y
+    return dot, na, nb
+
+
+def _seq_cosine(a, b):
+    """Row-wise raw cosine of :func:`_seq_fold`; 0/0 stays NaN."""
+    dot, na, nb = _seq_fold(a, b)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return dot / (np.sqrt(na) * np.sqrt(nb))
+
+
+def _as_matrix(col, d: int):
+    """An Arrow ``list<number>`` column as an ``(n, d)`` float64 matrix
+    plus its row validity mask.  A row is invalid - and zero-filled - if
+    it is null, its length is not ``d`` or it holds a null element (the
+    rows the SQL fold nulls out).  Widening to f64 is exact, like
+    ``cast("double")``."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    ok = pc.fill_null(pc.list_value_length(col), -1) \
+        .to_numpy(zero_copy_only=False) == d
+    flat = pc.list_flatten(col)
+    rows = pc.list_parent_indices(col).to_numpy()
+    ok[rows[flat.is_null().to_numpy(zero_copy_only=False)]] = False
+    vals = flat.to_numpy(zero_copy_only=False).astype(np.float64)
+    m = np.zeros((len(col), d))
+    m[ok] = vals[ok[rows]].reshape(int(ok.sum()), d)
+    return m, ok
+
+
 def cosine_rows_arrow(df: DataFrame, a_col: str, b_col: str | None = None,
                       out_col: str = "cos_raw",
                       const_b: list[float] | None = None) -> DataFrame:
@@ -64,20 +109,17 @@ def cosine_rows_arrow(df: DataFrame, a_col: str, b_col: str | None = None,
     query vector (``const_b``), in one Arrow-vectorized pass (guide
     §4.2).
 
-    Bit-identical to ``cosine(F.col(a_col), <b>)``: the numpy fast
-    path accumulates column-by-column, so every row sees the same IEEE
-    multiply/add sequence as the interpreted ``aggregate`` fold
-    (f32->f64 widening is exact), ``np.sqrt``/division are the same
-    correctly-rounded IEEE ops, and 0/0 stays NaN (the kernel uses
-    mapInArrow precisely so NaN survives the boundary as a VALUE, not
-    a pandas null - the round-7 near-dup lesson).  Rows the SQL fold
-    nulls out - null arrays, length mismatch (zip_with's null
-    padding), null elements - take a per-row fallback that returns
-    genuine Arrow nulls.  Rounding is deliberately left to the JVM:
-    callers apply ``F.round(out_col, 6)`` so ordering/rounding
-    semantics are untouched.  (On zero-norm rows the ANSI fold raises
-    DIVIDE_BY_ZERO while this kernel - like the DuckDB oracle and the
-    near-dup scorer - yields NaN; no testdata row hits that.)
+    Bit-identical to ``cosine(F.col(a_col), <b>)``: :func:`_seq_fold`
+    replays the fold's IEEE operation order, ``np.sqrt``/division are
+    the same correctly-rounded IEEE ops, and 0/0 stays NaN (mapInArrow
+    carries NaN across the boundary as a VALUE, not a null).  Rows the
+    SQL fold nulls out - null arrays, length mismatch (zip_with's null
+    padding), null elements - become Arrow nulls; valid rows of
+    different lengths are scored in one vectorized call per distinct
+    length.  Rounding is deliberately left to the JVM: callers apply
+    ``F.round(out_col, 6)`` so ordering/rounding semantics are
+    untouched.  (On zero-norm rows the ANSI fold raises DIVIDE_BY_ZERO
+    while this kernel - like the near-dup scorer - yields NaN.)
 
     All columns of ``df`` pass through; project before calling so the
     vectors cross the Python boundary exactly once.
@@ -88,106 +130,30 @@ def cosine_rows_arrow(df: DataFrame, a_col: str, b_col: str | None = None,
                             + [StructField(out_col, DoubleType())])
     ia = df.columns.index(a_col)
     ib = df.columns.index(b_col) if const_b is None else None
-    qb = None if const_b is None else [float(x) for x in const_b]
+    qb = None if const_b is None else np.asarray(const_b, dtype=np.float64)
     names = df.columns + [out_col]
 
     def fn(batches):
-        import math
-
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        if qb is not None:
-            bn_q = 0.0
-            for y in qb:
-                bn_q += y * y
-            nb_q = math.sqrt(bn_q)
-
-        def mat(col, n, d=None):
-            """(n, d) float64 matrix, or None if ragged/nulls.  With
-            ``d=None`` the uniform length is derived from row 0."""
-            if col.null_count:
-                return None
-            lens = pc.list_value_length(col).to_numpy(
-                zero_copy_only=False)
-            if d is None:
-                d = int(lens[0])
-            if not (lens == d).all():
-                return None
-            flat = col.flatten()
-            if flat.null_count:
-                return None
-            return flat.to_numpy(zero_copy_only=False) \
-                .astype(np.float64).reshape(n, d)
-
-        def fast(col_a, col_b, n):
-            """Uniform-length, no-null batches: matrixize + dim loop."""
-            if n == 0:
-                return np.empty(0)
-            ma = mat(col_a, n, len(qb) if qb is not None else None)
-            if ma is None:
-                return None
-            d = ma.shape[1]
-            if qb is None:
-                mb = mat(col_b, n, d)
-                if mb is None:
-                    return None
-            dot = np.zeros(n)
-            na = np.zeros(n)
-            if qb is None:
-                nb = np.zeros(n)
-                for k in range(d):
-                    x = ma[:, k]
-                    y = mb[:, k]
-                    dot = dot + x * y
-                    na = na + x * x
-                    nb = nb + y * y
-                nb = np.sqrt(nb)
-            else:
-                for k in range(d):
-                    x = ma[:, k]
-                    dot = dot + x * qb[k]
-                    na = na + x * x
-                nb = nb_q
-            with np.errstate(divide="ignore", invalid="ignore"):
-                return dot / (np.sqrt(na) * nb)
-
-        def slow(col_a, col_b, n):
-            """Per-row replay of the fold's null semantics."""
-            va_l = col_a.to_pylist()
-            vb_l = [qb] * n if qb is not None else col_b.to_pylist()
-            res = np.zeros(n)
-            mask = np.zeros(n, dtype=bool)
-            for i in range(n):
-                va, vb = va_l[i], vb_l[i]
-                if va is None or vb is None or len(va) != len(vb) \
-                        or any(x is None for x in va) \
-                        or any(y is None for y in vb):
-                    mask[i] = True
-                    continue
-                acc = 0.0
-                an = 0.0
-                bn = 0.0
-                for x, y in zip(va, vb):
-                    acc += x * y
-                    an += x * x
-                    bn += y * y
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    res[i] = np.float64(acc) / np.float64(
-                        math.sqrt(an) * math.sqrt(bn))
-            return res, mask
-
         for batch in batches:
-            n = batch.num_rows
             col_a = batch.column(ia)
-            col_b = batch.column(ib) if qb is None else None
-            res = fast(col_a, col_b, n)
-            if res is not None:
-                out = pa.array(res, type=pa.float64())
+            if qb is None:
+                col_b = batch.column(ib)
+                lens = np.unique(pc.list_value_length(col_a).drop_null()
+                                 .to_numpy(zero_copy_only=False)).tolist()
             else:
-                res, mask = slow(col_a, col_b, n)
-                out = pa.array(res, type=pa.float64(), mask=mask)
+                lens = [len(qb)]
+            res = np.zeros(batch.num_rows)
+            valid = np.zeros(batch.num_rows, dtype=bool)
+            for d in lens:
+                ma, ok = _as_matrix(col_a, d)
+                if qb is None:
+                    mb, ok_b = _as_matrix(col_b, d)
+                    ok &= ok_b
+                else:
+                    mb = np.broadcast_to(qb, ma.shape)
+                res[ok] = _seq_cosine(ma, mb)[ok]
+                valid |= ok
+            out = pa.array(res, type=pa.float64(), mask=~valid)
             yield pa.RecordBatch.from_arrays(
                 list(batch.columns) + [out], names=names)
 
@@ -202,6 +168,11 @@ def topk_cosine(embeddings: DataFrame, query_vec: list[float], k: int = 10,
     shuffle, the top-k is merged on the driver from per-partition heaps.
     The query vector is a kernel constant (not shipped per row);
     rounding stays in the JVM so values match the fold bit-for-bit.
+
+    A zero-norm row scores NaN (0/0) and ranks FIRST: Spark orders NaN
+    above every number.  The DuckDB twin differs there - DuckDB 1.0
+    returns NULL for a double 0/0 and sorts it last - so zero-norm
+    rows are outside the oracle contract (no testdata row has one).
     """
     scored = cosine_rows_arrow(embeddings.select(F.col(id_col), vec_col),
                                vec_col, const_b=query_vec)
@@ -234,8 +205,6 @@ def topk_cosine_many(embeddings: DataFrame, queries: DataFrame,
     probing its cell - approximate, recall set by ``n_probe``).
     Without an index the exact path is used regardless of Q.
     """
-    from pyspark.sql.window import Window
-
     if ivf_path is not None and centroids is not None:
         # limit() bounds the routing probe: only threshold+1 rows of
         # the queries frame are materialized, so a derived queries df
@@ -284,25 +253,12 @@ def topk_cosine_many_ivf(spark, path: str, queries: DataFrame,
     per query.  With ``n_probe == len(centroids)`` results equal the
     exact path.  Output schema matches :func:`topk_cosine_many`.
     """
-    from pyspark.sql.window import Window
-
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     qrows = queries.select(qid_col, qvec_col).collect()
     probe_rows = []
     for row in qrows:
-        qv = [float(x) for x in row[qvec_col]]
-        # same sequential-fold distance as the single-query IVF path
-        # (bit-stable vs the Spark/DuckDB folds)
-        dists = []
-        for c in centroids:
-            d = 0.0
-            for x, y in zip(qv, c):
-                d += (x - float(y)) * (x - float(y))
-            dists.append(d)
-        probed = sorted(range(len(centroids)),
-                        key=lambda i: dists[i])[:n_probe]
-        for cell in probed:
+        for cell in _probe_cells(row[qvec_col], centroids, n_probe):
             probe_rows.append((row[qid_col], cell))
     # qid keeps the CALLER's type; qv rides along from the queries df
     # (broadcast x broadcast - both tiny) so its element type is
@@ -430,17 +386,13 @@ def _sq_dist(vec: Column, centroid: list[float]) -> Column:
         F.lit(0.0), lambda acc, v: acc + v)
 
 
-def topk_cosine_ivf(embeddings: DataFrame, query_vec: list[float],
-                    centroids: list[list[float]], k: int = 10,
-                    n_probe: int = 2, id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
-    """IVF search: score only vectors in the query's ``n_probe`` nearest
-    cells.  The scale path bucketizes the table once (write ``cell`` as a
-    partition column) so a query reads only its probed cells.
+def _probe_cells(query_vec: list[float], centroids: list[list[float]],
+                 n_probe: int) -> list[int]:
+    """The ``n_probe`` centroids nearest to ``query_vec`` by squared L2.
 
-    The probe selection uses a plain sequential f64 fold (not numpy's
-    pairwise summation) so it is bit-identical to the Spark/DuckDB
-    sequential list folds used everywhere else - required for the oracle.
+    A plain sequential f64 fold (not numpy's pairwise summation), so it
+    is bit-identical to the Spark/DuckDB sequential list folds used
+    everywhere else - required for the oracle.
     """
     dists = []
     for c in centroids:
@@ -448,7 +400,18 @@ def topk_cosine_ivf(embeddings: DataFrame, query_vec: list[float],
         for x, y in zip(query_vec, c):
             d += (float(x) - float(y)) * (float(x) - float(y))
         dists.append(d)
-    probed = sorted(range(len(centroids)), key=lambda i: dists[i])[:n_probe]
+    return sorted(range(len(centroids)), key=lambda i: dists[i])[:n_probe]
+
+
+def topk_cosine_ivf(embeddings: DataFrame, query_vec: list[float],
+                    centroids: list[list[float]], k: int = 10,
+                    n_probe: int = 2, id_col: str = "vec_id",
+                    vec_col: str = "embedding") -> DataFrame:
+    """IVF search: score only vectors in the query's ``n_probe`` nearest
+    cells.  The scale path bucketizes the table once (write ``cell`` as a
+    partition column) so a query reads only its probed cells.
+    """
+    probed = _probe_cells(query_vec, centroids, n_probe)
     qcol = _query_literal(query_vec)
     return (embeddings
             .withColumn("_cell", ivf_cell(F.col(vec_col), centroids))
@@ -480,13 +443,7 @@ def topk_cosine_ivf_indexed(spark, path: str, query_vec: list[float],
     """Search a materialized IVF index: ``cell IN probed`` is a partition
     filter, so the scan touches only the probed cells' files.  Results
     are identical to :func:`topk_cosine_ivf` over the same centroids."""
-    dists = []
-    for c in centroids:
-        d = 0.0
-        for x, y in zip(query_vec, c):
-            d += (float(x) - float(y)) * (float(x) - float(y))
-        dists.append(d)
-    probed = sorted(range(len(centroids)), key=lambda i: dists[i])[:n_probe]
+    probed = _probe_cells(query_vec, centroids, n_probe)
     q = _query_literal(query_vec)
     return (spark.read.parquet(path)
             .filter(F.col("cell").isin(probed))
@@ -588,6 +545,13 @@ def embed_text_table(df: DataFrame, text_col: str = "text",
                     .alias("embedding")))
 
 
+# block count per near-dup bucket: each bucket's ids are split into this
+# many deterministic blocks, one task per block pair
+_ND_BLOCKS = 4
+# candidate pairs rescored per vectorized call in the near-dup scorer
+_RESCORE_SLICE = 1 << 15
+
+
 def cosine_near_dup_pairs_lsh(embeddings: DataFrame, dim: int,
                               threshold: float = 0.95, bands: int = 4,
                               planes_per_band: int = 2, seed: int = 42,
@@ -614,9 +578,9 @@ def cosine_near_dup_pairs_lsh(embeddings: DataFrame, dim: int,
     all-zero embedding clusters piling into one bucket):
 
     ``max_bucket``: drop (band, chunk) buckets holding more than this
-    many ids before the self-join - the identical broadcast anti-join
-    bound as ``simhash_hamming_pairs``.  Absolute, so right when the
-    caller knows the bucket budget.
+    many ids before scoring - the same bound as
+    ``simhash_hamming_pairs``.  Absolute, so right when the caller knows
+    the bucket budget.
 
     ``max_bucket_factor``: drop buckets holding more than
     ``factor * n / 2^planes_per_band`` ids (factor x the uniform share).
@@ -627,18 +591,20 @@ def cosine_near_dup_pairs_lsh(embeddings: DataFrame, dim: int,
 
     Both caps report a deterministic SUBSET: a pair is missed only if
     every band it agrees on is hot (same trade as max_df in
-    ``ngram_jaccard_pairs``).  The hot list is tiny, so the exclusion is
-    a broadcast anti-join, not a shuffle.
+    ``ngram_jaccard_pairs``).  Dropping hot buckets is one step before
+    scoring: a ``(band, chunk)`` count aggregate plus a per-band window
+    (the hot criterion, written once as Spark expressions mirroring the
+    oracle SQL) yields the hot rows - at most ``bands *
+    2^planes_per_band`` - which are collected and applied as a literal
+    key filter.
 
-    Plan shape (round-7 restructure, guide sections 2.3/2.4/4.2): one
-    explode (x bands) of (id, band, chunk, vec), then each (band,
-    chunk) bucket is scored by a VECTORIZED native kernel
-    (``applyInPandas`` + numpy GEMM) instead of a relational self-join.
-    The previous shape joined the bucket with itself, shuffled the FULL
-    O(sum bucket^2) candidate set through a ``distinct`` and
-    re-attached the vectors with two more joins, then paid an
-    interpreted ~20 us array fold per pair - measured 316 s at sf1.0
-    (2*10^8 candidates).  Now each vector crosses the Python boundary
+    Plan shape (guide sections 2.3/2.4/4.2): one explode (x bands) of
+    (id, band, chunk, vec), then each (band, chunk) bucket is scored by
+    a VECTORIZED native kernel (grouped ``applyInArrow`` + numpy GEMM)
+    instead of a relational self-join.  A self-join shape shuffles the
+    FULL O(sum bucket^2) candidate set through a ``distinct`` and pays
+    an interpreted ~20 us array fold per pair - measured 316 s at sf1.0
+    (2*10^8 candidates).  Here each vector crosses the Python boundary
     once per bucket membership (n * bands rows, NOT n^2), pair scoring
     runs at GEMM speed, and only final pairs reach a shuffle (the
     closing cross-band ``distinct``).
@@ -646,24 +612,24 @@ def cosine_near_dup_pairs_lsh(embeddings: DataFrame, dim: int,
     Bit-parity with the SQL fold (the oracle contract) is kept by a
     two-phase score: the GEMM result plus a rigorous floating-point
     error bound selects candidate pairs (a provable SUPERSET of
-    ``round(cos, 6) >= threshold``), then each candidate is re-scored
-    with the exact sequential f64 fold and Spark's exact HALF_UP
-    6-decimal rounding (``Decimal(repr(x))`` mirrors
+    ``round(cos, 6) >= threshold``), then the candidates are re-scored
+    with the exact sequential f64 fold (:func:`_seq_fold`) and Spark's
+    exact HALF_UP 6-decimal rounding (``Decimal(repr(x))`` mirrors
     ``BigDecimal.valueOf``).  NaN pairs (zero-norm vectors) follow
-    Spark/DuckDB NaN-is-greatest comparison semantics.
+    Spark/DuckDB NaN-is-greatest comparison semantics; the Arrow
+    boundary carries the NaN as a value.
 
     Parallelism is by construction: each bucket's ids are split into
-    ``n_blocks`` deterministic blocks (``LIVRE_ND_BLOCKS``, default 4)
-    and every block PAIR is an independent task, so one hot bucket
-    spreads over ``n_blocks * (n_blocks + 1) / 2`` tasks instead of
-    one - the knob to raise with cluster size.  Never a cross join;
+    ``_ND_BLOCKS`` deterministic blocks and every block PAIR is an
+    independent task, so one hot bucket spreads over ``_ND_BLOCKS *
+    (_ND_BLOCKS + 1) / 2`` tasks instead of one.  Never a cross join;
     the all-pairs variant below is the small-scale twin.
     """
     planes = hyperplanes(dim, bands * planes_per_band, seed)
     # parallelize BEFORE the signature folds: the interpreted per-plane
     # fold costs ~80 us/row and is evaluated by the work frame AND the
-    # hot-bucket counts branch - on a starved single-task scan that
-    # serialized the whole front of the query (guide 2.5)
+    # hot-bucket counts - on a starved single-task scan that serialized
+    # the whole front of the query (guide 2.5)
     src = ensure_scan_parallelism(
         embeddings.select(F.col(id_col).alias("id"),
                           F.col(vec_col).alias("v")))
@@ -687,61 +653,31 @@ def cosine_near_dup_pairs_lsh(embeddings: DataFrame, dim: int,
         # by the second consumer (same durability trade as the dedup
         # pairs functions)
         buckets = buckets.localCheckpoint(eager=False)
-        n_buckets = 2 ** planes_per_band
-        if bands * n_buckets <= 4096:
-            # the whole (band, chunk) count table is at most
-            # bands * 2^planes_per_band rows - collect it and inline
-            # the hot set as a literal filter instead of a
-            # counts-groupBy + per-band window + broadcast anti-join
-            # (three plan stages the main job had to wait on; the
-            # arithmetic below replays the SQL expressions op for op,
-            # so the hot set is identical to the oracle's)
-            rows = (buckets.groupBy("band", "chunk")
-                    .agg(F.count("*").alias("n_ids")).collect())
-            band_totals: dict[int, int] = {}
-            for r in rows:
-                band_totals[r["band"]] = band_totals.get(r["band"], 0) \
-                    + r["n_ids"]
-            hot_keys = []
-            for r in rows:
-                is_hot = (max_bucket is not None
-                          and r["n_ids"] > max_bucket)
-                if not is_hot and max_bucket_factor is not None:
-                    share = (band_totals[r["band"]] * max_bucket_factor
-                             / n_buckets)
-                    is_hot = r["n_ids"] > share
-                if is_hot:
-                    hot_keys.append(r["band"] * (1 << 60) + r["chunk"])
-            if hot_keys:
-                buckets = buckets.filter(
-                    ~(F.col("band").cast("long") * F.lit(1 << 60)
-                      + F.col("chunk")).isin(hot_keys))
-        else:
-            # planes_per_band sized for real scale: the count table is
-            # too wide to collect - keep the distributed shape
-            counts = (buckets.groupBy("band", "chunk")
-                      .agg(F.count("*").alias("n_ids")))
-            hot_cond = F.lit(False)
-            if max_bucket is not None:
-                hot_cond = hot_cond | (F.col("n_ids") > max_bucket)
-            if max_bucket_factor is not None:
-                # each id appears exactly once per band, so the band
-                # total IS n; the window runs over <= bands * 2^planes
-                # aggregate rows
-                band_total = F.sum("n_ids").over(Window.partitionBy("band"))
-                share = (band_total * max_bucket_factor
-                         / (2 ** planes_per_band))
-                counts = counts.withColumn("uniform_cap", share)
-                hot_cond = hot_cond | (F.col("n_ids") > F.col("uniform_cap"))
-            hot = counts.filter(hot_cond).select("band", "chunk")
-            buckets = buckets.join(F.broadcast(hot), ["band", "chunk"],
-                                   "left_anti")
-    n_blocks = int(os.environ.get("LIVRE_ND_BLOCKS", "4"))
+        counts = (buckets.groupBy("band", "chunk")
+                  .agg(F.count("*").alias("n_ids")))
+        hot_cond = F.lit(False)
+        if max_bucket is not None:
+            hot_cond = hot_cond | (F.col("n_ids") > max_bucket)
+        if max_bucket_factor is not None:
+            # each id appears exactly once per band, so the band total
+            # IS n
+            band_total = F.sum("n_ids").over(Window.partitionBy("band"))
+            counts = counts.withColumn(
+                "uniform_cap",
+                band_total * max_bucket_factor / (2 ** planes_per_band))
+            hot_cond = hot_cond | (F.col("n_ids") > F.col("uniform_cap"))
+        hot_keys = [r["band"] * (1 << 60) + r["chunk"] for r in
+                    counts.filter(hot_cond).select("band", "chunk")
+                    .collect()]
+        if hot_keys:
+            buckets = buckets.filter(
+                ~(F.col("band").cast("long") * F.lit(1 << 60)
+                  + F.col("chunk")).isin(hot_keys))
     # deterministic block per id (placement only - never in results),
     # every row replicated to each block pair it participates in
-    blk = F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks))
+    blk = F.pmod(F.xxhash64(F.col("id")), F.lit(_ND_BLOCKS))
     entries = []
-    for j in range(n_blocks):
+    for j in range(_ND_BLOCKS):
         entries.append(F.struct(
             F.least(blk, F.lit(j)).alias("lo"),
             F.greatest(blk, F.lit(j)).alias("hi"),
@@ -754,70 +690,47 @@ def cosine_near_dup_pairs_lsh(embeddings: DataFrame, dim: int,
                     F.col("e.lo").alias("lo"), F.col("e.hi").alias("hi"),
                     F.col("e.side").alias("side")))
     id_type = embeddings.schema[id_col].dataType.simpleString()
-    pairs = (work.groupBy("band", "chunk", "lo", "hi")
-             .applyInPandas(_block_pair_scorer(threshold, dim),
-                            schema=f"id_a {id_type}, id_b {id_type},"
-                                   f" cos_sim double"))
-    # pandas NaN crosses Arrow as NULL; the scorer never emits null, so
-    # restore the SQL fold's true NaN for zero-norm pairs (Spark and
-    # DuckDB both compare/group NaN as a greatest VALUE, not null)
-    pairs = pairs.select(
-        "id_a", "id_b",
-        F.coalesce(F.col("cos_sim"), F.lit(float("nan"))).alias("cos_sim"))
-    return pairs.distinct()
+    return (work.groupBy("band", "chunk", "lo", "hi")
+            .applyInArrow(_block_pair_scorer(threshold, dim),
+                          schema=f"id_a {id_type}, id_b {id_type},"
+                                 f" cos_sim double")
+            .distinct())
+
+
+def _round6(x: float) -> float:
+    """Spark's ``round(x, 6)``: HALF_UP on ``BigDecimal.valueOf(x)``,
+    whose digits ``repr`` reproduces; NaN and infinities pass through."""
+    if not math.isfinite(x):
+        return x
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"),
+                                           rounding=ROUND_HALF_UP))
 
 
 def _block_pair_scorer(threshold: float, dim: int):
-    """Pandas kernel scoring one (band, chunk, block-lo, block-hi)
+    """Arrow kernel scoring one (band, chunk, block-lo, block-hi)
     group: GEMM + error-bounded candidate mask, exact sequential-fold
     rescore of candidates (see cosine_near_dup_pairs_lsh).
 
     Precondition (as the hyperplane signatures already assume): vectors
-    are length-``dim`` with non-null elements.  Null or wrong-length
-    vectors are excluded from pairing here, mirroring the SQL fold
-    where any null element nulls the dot and the pair is filtered out.
+    are length-``dim`` with non-null elements.  Null, wrong-length or
+    null-element vectors are excluded from pairing here, mirroring the
+    SQL fold where any null element nulls the dot and the pair is
+    filtered out.
     """
 
-    def score(pdf):
-        import math
-        from decimal import ROUND_HALF_UP, Decimal
-
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame({"id_a": pdf["id"].iloc[0:0],
-                              "id_b": pdf["id"].iloc[0:0],
-                              "cos_sim": pd.Series([], dtype="float64")})
-        ok = pdf["v"].map(lambda v: v is not None and len(v) == dim)
-        pdf = pdf[ok]
-        if len(pdf) == 0:
-            return empty
-        triangular = bool(pdf["lo"].iat[0] == pdf["hi"].iat[0])
+    def score(key, table):
+        v, ok = _as_matrix(table.column("v"), dim)
+        ids = table.column("id").combine_chunks()
+        triangular = key[2].as_py() == key[3].as_py()
         if triangular:
-            a_rows = b_rows = pdf
+            ia = ib = np.flatnonzero(ok)
         else:
-            a_rows = pdf[pdf["side"] == "a"]
-            b_rows = pdf[pdf["side"] == "b"]
-        if len(a_rows) == 0 or len(b_rows) == 0:
-            return empty
-        # float32 -> float64 widening is exact, matching cast(double)
-        va = np.stack(a_rows["v"].to_numpy()).astype(np.float64)
-        vb = va if triangular else \
-            np.stack(b_rows["v"].to_numpy()).astype(np.float64)
-        ida = a_rows["id"].to_numpy()
-        idb = ida if triangular else b_rows["id"].to_numpy()
-
-        def seq_norm(m):
-            # per-column accumulation: one IEEE multiply + one IEEE add
-            # per element in array order - bit-identical to the SQL fold
-            acc = np.zeros(len(m))
-            for k in range(m.shape[1]):
-                x = m[:, k]
-                acc = acc + x * x
-            return np.sqrt(acc)
-
-        na = seq_norm(va)
-        nb = na if triangular else seq_norm(vb)
+            side = table.column("side").to_numpy()
+            ia = np.flatnonzero(ok & (side == "a"))
+            ib = np.flatnonzero(ok & (side == "b"))
+        va, vb = v[ia], v[ib]
+        na = np.sqrt(_seq_fold(va, va)[1])
+        nb = na if triangular else np.sqrt(_seq_fold(vb, vb)[1])
         dot_m = va @ vb.T
         abs_m = np.abs(va) @ np.abs(vb).T
         denom = na[:, None] * nb[None, :]
@@ -825,42 +738,24 @@ def _block_pair_scorer(threshold: float, dim: int):
         # gamma_dim ~ dim*eps ~ 1.4e-14 at dim 64; the 1e-12 factor is
         # ~70x that bound, and the 2e-6 slack covers the half-up
         # rounding boundary (round(x,6) >= t implies x >= t - 5.1e-7)
-        err = 1e-12 * abs_m * m_dim_factor(va.shape[1])
+        err = 1e-12 * abs_m * m_dim_factor(dim)
         cand = (dot_m + err) >= (threshold - 2e-6) * denom
         if triangular:
             cand = np.triu(cand, k=1)
-        out_a, out_b, out_c = [], [], []
-        for i, j in zip(*np.nonzero(cand)):
-            x, y = va[i], vb[j]
-            acc = 0.0
-            an = 0.0
-            bn = 0.0
-            for k in range(x.shape[0]):
-                acc += float(x[k]) * float(y[k])
-                an += float(x[k]) * float(x[k])
-                bn += float(y[k]) * float(y[k])
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = float(np.float64(acc)
-                            / np.float64(math.sqrt(an) * math.sqrt(bn)))
-            if math.isnan(cos):
-                keep, cval = True, float("nan")  # NaN >= t in Spark/DuckDB
-            elif math.isinf(cos):
-                keep, cval = cos > 0, cos
-            else:
-                cval = float(Decimal(repr(cos))
-                             .quantize(Decimal("0.000001"),
-                                       rounding=ROUND_HALF_UP))
-                keep = cval >= threshold
-            if keep:
-                pa, pb = (ida[i], idb[j]) if ida[i] < idb[j] \
-                    else (idb[j], ida[i])
-                out_a.append(pa)
-                out_b.append(pb)
-                out_c.append(cval)
-        if not out_a:
-            return empty
-        return pd.DataFrame({"id_a": out_a, "id_b": out_b,
-                             "cos_sim": out_c})
+        i, j = np.nonzero(cand)
+        # rescore in slices: a dense bucket (a degenerate cluster with
+        # the cap off) has O(bucket^2) candidates, each gathering 2 rows
+        raw = np.empty(len(i))
+        for s in range(0, len(i), _RESCORE_SLICE):
+            sl = slice(s, s + _RESCORE_SLICE)
+            raw[sl] = _seq_cosine(va[i[sl]], vb[j[sl]])
+        cos = np.array([_round6(c) for c in raw.tolist()], dtype=np.float64)
+        keep = np.isnan(cos) | (cos >= threshold)  # NaN >= t in Spark/DuckDB
+        id_a, id_b = ids.take(ia[i[keep]]), ids.take(ib[j[keep]])
+        swap = pc.greater(id_a, id_b)
+        return pa.table({"id_a": pc.if_else(swap, id_b, id_a),
+                         "id_b": pc.if_else(swap, id_a, id_b),
+                         "cos_sim": pa.array(cos[keep], type=pa.float64())})
 
     return score
 

@@ -29,6 +29,7 @@ def audit(plan: str) -> dict:
         "python": ("ArrowEval" if "ArrowEval" in plan else
                    "MapInArrow" if "PythonMapInArrow" in plan
                    or "MapInArrow" in plan else
+                   "GroupsInArrow" if "FlatMapGroupsInArrow" in plan else
                    "GroupsInPandas" if "FlatMapGroupsInPandas" in plan else
                    "MapInPandas" if "MapInPandas" in plan else
                    "RowUDF!" if "BatchEvalPython" in plan else "-"),

@@ -1,5 +1,9 @@
 """Unit tests for the training-data function modules (small local frames)."""
 
+import math
+import random
+import struct
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -71,6 +75,15 @@ def test_simhash_similarity(spark, docs):
     assert hamming(got[0], got[1]) < hamming(got[0], got[2])
 
 
+def _bits(v):
+    """A float's exact bit pattern (NaN and null kept distinct)."""
+    if v is None:
+        return None
+    if math.isnan(v):
+        return b"NaN"
+    return struct.pack("<d", v)
+
+
 @pytest.fixture(scope="module")
 def embeddings(spark):
     rows = [
@@ -84,10 +97,15 @@ def embeddings(spark):
 
 
 def test_topk_cosine(spark, embeddings):
-    got = sim.topk_cosine(embeddings.filter("vec_id != 0"),
-                          [1.0, 0.0, 0.0, 0.0], k=3).collect()
-    assert [r["vec_id"] for r in got] == [1, 4, 2]
-    assert got[0]["cos_sim"] > 0.99
+    """Ranked by cosine; a zero-norm vector scores 0/0 = NaN (never an
+    error) and, as Spark orders NaN above every number, ranks first."""
+    zero = spark.createDataFrame([(9, [0.0, 0.0, 0.0, 0.0])],
+                                 ["vec_id", "embedding"])
+    got = sim.topk_cosine(embeddings.filter("vec_id != 0").unionByName(zero),
+                          [1.0, 0.0, 0.0, 0.0], k=4).collect()
+    assert [r["vec_id"] for r in got] == [9, 1, 4, 2]
+    assert math.isnan(got[0]["cos_sim"])
+    assert got[1]["cos_sim"] > 0.99
 
 
 def test_cosine_near_dup_pairs(spark, embeddings):
@@ -189,13 +207,34 @@ def test_ngram_jaccard_max_df_caps_hot_shingles(spark):
 
 
 def test_cosine_near_dup_pairs_lsh_recall(spark, embeddings):
-    lsh = {(r["id_a"], r["id_b"]) for r in
-           sim.cosine_near_dup_pairs_lsh(embeddings, dim=4, threshold=0.95,
-                                         bands=4, planes_per_band=2).collect()}
-    exact = {(r["id_a"], r["id_b"]) for r in
-             sim.cosine_near_dup_pairs(embeddings, threshold=0.95).collect()}
-    assert lsh <= exact               # bucketing never invents pairs
-    assert (0, 1) in lsh              # the near-identical pair is found
+    """Every LSH pair is an exact-twin pair with the SAME cos_sim bits.
+    Pair (0, 5) has the raw cosine 0.9500005 exactly, a decimal tie
+    that HALF_UP rounds up (numpy's half-even round would not).  The
+    seeded dim-64 float32 set at threshold 0.3 sends hundreds of
+    candidates through the vectorized rescore and its rounding."""
+    toy = embeddings.unionByName(spark.createDataFrame(
+        [(5, [0.9500005, 0.3122483786983527, 0.0, 0.0])],
+        ["vec_id", "embedding"]))
+    rnd = random.Random(64)
+    wide = spark.createDataFrame(
+        [(i, [rnd.gauss(0.0, 1.0) for _ in range(64)]) for i in range(240)],
+        "vec_id long, embedding array<float>")
+    found = {}
+    for name, df, dim, t in (("toy", toy, 4, 0.95),
+                             ("wide", wide, 64, 0.3)):
+        lsh = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in
+               sim.cosine_near_dup_pairs_lsh(
+                   df, dim=dim, threshold=t, bands=4,
+                   planes_per_band=2).collect()}
+        exact = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in
+                 sim.cosine_near_dup_pairs(df, threshold=t).collect()}
+        assert set(lsh) <= set(exact)     # bucketing never invents pairs
+        for pair, c in lsh.items():
+            assert _bits(c) == _bits(exact[pair]), (name, pair, c)
+        found[name] = lsh
+    assert (0, 1) in found["toy"]         # the near-identical pair is found
+    assert found["toy"][(0, 5)] == 0.950001
+    assert len(found["wide"]) >= 100
 
 
 def test_cosine_near_dup_lsh_bucket_caps(spark):
@@ -486,10 +525,8 @@ def test_minhash_signature_df_matches_column_fold(spark):
 def test_near_dup_zero_norm_pairs_keep_nan_semantics(spark):
     """Zero vectors sign-hash into the same bucket and their cosine is
     NaN; Spark (and DuckDB) treat NaN as greater than any threshold, so
-    the pair must be REPORTED with a NaN cos_sim - the pandas scorer
+    the pair must be REPORTED with a NaN cos_sim - the Arrow scorer
     must preserve that, not apply Python/numpy NaN-comparison rules."""
-    import math
-
     rows = [(0, [0.0, 0.0, 0.0, 0.0]), (1, [0.0, 0.0, 0.0, 0.0]),
             (2, [1.0, 0.2, 0.0, 0.0]), (3, [1.0, 0.0, 0.2, 0.0])]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
@@ -503,11 +540,11 @@ def test_near_dup_zero_norm_pairs_keep_nan_semantics(spark):
 
 
 def test_near_dup_malformed_vectors_excluded_not_fatal(spark):
-    """Null or wrong-length vectors never pair (the SQL fold nulled
-    their dot and the filter dropped them); the pandas scorer must
-    exclude them without failing the task."""
+    """Null, wrong-length or null-element vectors never pair (the SQL
+    fold nulls their dot and the filter drops them); the Arrow scorer
+    must exclude them without failing the task."""
     rows = [(0, [1.0, 0.1, 0.0, 0.0]), (1, [1.0, 0.0, 0.1, 0.0]),
-            (2, None), (3, [1.0, 0.0])]
+            (2, None), (3, [1.0, 0.0]), (4, [1.0, 0.05, None, 0.05])]
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<double>")
     got = {(r["id_a"], r["id_b"]) for r in
@@ -533,60 +570,50 @@ def test_ensure_scan_parallelism_repartitions_only_when_starved(spark):
 
 def test_cosine_rows_arrow_matches_fold(spark):
     """The Arrow-vectorized cosine scorer must be BIT-identical to the
-    interpreted zip_with/aggregate fold on clean rows, and replicate
-    the fold's null semantics (null array, length mismatch, null
-    element) with genuine nulls.  Zero-norm rows - where the ANSI fold
-    would raise DIVIDE_BY_ZERO - must yield NaN like the DuckDB oracle
-    (the near-dup scorer's established semantics)."""
-    import math
-    import random
-    import struct
-
-    from pyspark.sql import functions as F
-
+    interpreted zip_with/aggregate fold, on an all-clean frame (no
+    nulls, uniform lengths) and on one that also holds the fold's null
+    cases (null array, length mismatch, null element), which must come
+    back as genuine nulls.  Zero-norm rows - where the ANSI fold would
+    raise DIVIDE_BY_ZERO - must yield NaN (the near-dup scorer's
+    established semantics)."""
     rnd = random.Random(31)
     rows = [(i,
              [rnd.uniform(-2, 2) for _ in range(16)],
              [rnd.uniform(-1, 1) for _ in range(16)])
             for i in range(60)]
-    rows += [
+    edge = [
         (100, [1e30] * 16, [1e30] * 16),
         (101, [1e-30] * 16, [1e-30] * 16),
         (102, [1.0] * 15, [1.0] * 16),          # ragged -> null
         (103, None, [1.0] * 16),                # null array -> null
         (104, [1.0] * 15 + [None], [1.0] * 16),  # null element -> null
         (105, [float("nan")] * 16, [1.0] * 16),  # NaN propagates
+        (106, [0.5] * 8, [2.0] * 8),            # second length, valid
     ]
-    df = spark.createDataFrame(rows, "id long, a array<float>, b array<float>")
-    ref = {r["id"]: r["c"] for r in
-           df.select("id", sim.cosine(F.col("a"), F.col("b")).alias("c"))
-           .collect()}
-    # both column-vs-column and column-vs-constant modes
-    got_cols = {r["id"]: r["cos_raw"] for r in
-                sim.cosine_rows_arrow(df, "a", "b").select(
-                    "id", "cos_raw").collect()}
     qv = rows[0][2]
-    ref_const = {r["id"]: r["c"] for r in
-                 df.select("id", sim.cosine(
-                     F.col("a"), sim._query_literal(qv)).alias("c"))
-                 .collect()}
-    got_const = {r["id"]: r["cos_raw"] for r in
-                 sim.cosine_rows_arrow(df, "a", const_b=qv).select(
-                     "id", "cos_raw").collect()}
+    for data in (rows, rows + edge):
+        df = spark.createDataFrame(
+            data, "id long, a array<float>, b array<float>")
+        ref = {r["id"]: r["c"] for r in
+               df.select("id", sim.cosine(F.col("a"), F.col("b")).alias("c"))
+               .collect()}
+        # both column-vs-column and column-vs-constant modes
+        got_cols = {r["id"]: r["cos_raw"] for r in
+                    sim.cosine_rows_arrow(df, "a", "b").select(
+                        "id", "cos_raw").collect()}
+        ref_const = {r["id"]: r["c"] for r in
+                     df.select("id", sim.cosine(
+                         F.col("a"), sim._query_literal(qv)).alias("c"))
+                     .collect()}
+        got_const = {r["id"]: r["cos_raw"] for r in
+                     sim.cosine_rows_arrow(df, "a", const_b=qv).select(
+                         "id", "cos_raw").collect()}
+        for want, got in ((ref, got_cols), (ref_const, got_const)):
+            assert set(want) == set(got)
+            for k in want:
+                assert _bits(want[k]) == _bits(got[k]), (k, want[k], got[k])
 
-    def bits(v):
-        if v is None:
-            return None
-        if math.isnan(v):
-            return b"NaN"
-        return struct.pack("<d", v)
-
-    for want, got in ((ref, got_cols), (ref_const, got_const)):
-        assert set(want) == set(got)
-        for k in want:
-            assert bits(want[k]) == bits(got[k]), (k, want[k], got[k])
-
-    # zero-norm: scorer yields NaN (oracle semantics), never raises
+    # zero-norm: scorer yields NaN, never raises
     zdf = spark.createDataFrame(
         [(0, [0.0] * 16, [1.0] * 16), (1, [], [])],
         "id long, a array<float>, b array<float>")
