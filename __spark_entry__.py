@@ -700,7 +700,7 @@ def q_sim_near_dup(spark, sf_dir):
     from a (band, chunk) equi-join - a hash join, never a cross join -
     then exact cosine on the candidates (~0.89 recall vs the exact twin
     at this threshold).  The scale-free skew cap is ACTIVE (drop buckets
-    holding > 3x the uniform n/2^planes share, as a literal key filter);
+    holding > 3x the uniform n/2^planes share, by a broadcast anti-join);
     uniform data is untouched at any n, degenerate clusters are bounded.
     """
     emb = _t(spark, sf_dir, "embeddings")

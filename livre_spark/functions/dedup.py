@@ -10,9 +10,14 @@ the hot path):
 - n-gram Jaccard: exploded shingle inverted index -> pair intersection
                counts -> |A∩B| / (|A|+|B|-|A∩B|)
 
-All hashes derive from md5 (portable to the DuckDB oracle); xxhash64
-would be faster JVM-side but is not reproducible outside Spark - at
-100 TB you swap `md5_long` for `xxhash64` via the ``hash_fn`` knob.
+All hashes derive from md5 (portable to the DuckDB oracle).
+
+The three LSH operators share one blocking pipeline (SparkER's
+blocking -> block purging -> comparison): :func:`_band_explode` emits
+one (band, key) bucket row per id and band, :func:`_drop_hot` purges
+oversized buckets, and :func:`_bucket_self_join` pairs the ids that
+share a bucket.  ``similarity.cosine_near_dup_pairs_lsh`` uses the
+first two.
 """
 
 from __future__ import annotations
@@ -97,8 +102,7 @@ def _mh_min(base: Column, i: int) -> Column:
 
 
 def minhash_signature_df(df: DataFrame, text_col: str, id_col: str,
-                         n_hashes: int, k: int,
-                         hash_fn: str = "md5") -> DataFrame:
+                         n_hashes: int, k: int) -> DataFrame:
     """(id, mh0..mhK) as ONE explode + hash-aggregate - the codegen path.
 
     Spark's higher-order array functions (``transform``/``array_min``)
@@ -122,8 +126,7 @@ def minhash_signature_df(df: DataFrame, text_col: str, id_col: str,
     exploded = base.select(
         "id", F.explode_outer(shingles(F.col("_t"), k)).alias("_s"))
     hashed = exploded.select(
-        "id", F.pmod(_mh(F.col("_s"), 0, hash_fn),
-                     F.lit(MH_MOD)).alias("_b"))
+        "id", F.pmod(_mh(F.col("_s"), 0), F.lit(MH_MOD)).alias("_b"))
     aggs = [
         F.coalesce(
             F.min(F.pmod(F.col("_b") * F.lit(_MH_A[i]) + F.lit(_MH_B[i]),
@@ -133,31 +136,75 @@ def minhash_signature_df(df: DataFrame, text_col: str, id_col: str,
     return hashed.groupBy("id").agg(*aggs)
 
 
-def _mh_fn(i: int):
-    return lambda s: _mh(s, i)
-
-
-def _mh(s: Column, i: int, hash_fn: str = "md5") -> Column:
-    """Per-shingle 60-bit hash.
-
-    ``md5`` (default) is portable to the DuckDB oracle - the correctness
-    contract.  ``xxhash64`` is the production knob: the JVM-native
-    non-cryptographic hash, measured 1.5x on simhash (2.93 -> 2.00s) and
-    1.4x on minhash-LSH (11.2 -> 8.2s) at sf0.1/8 cores; same
-    pmod-60-bit range, NOT oracle-comparable (different buckets).
-    """
-    if hash_fn == "xxhash64":
-        return F.pmod(F.xxhash64(F.concat(F.lit(f"{i}|"), s)),
-                      F.lit(1 << 60))
+def _mh(s: Column, i: int) -> Column:
+    """Per-shingle 60-bit hash: the first 15 hex digits of md5, portable
+    to the DuckDB oracle."""
     return F.conv(F.substring(F.md5(F.concat(F.lit(f"{i}|"), s)), 1, 15),
                   16, 10).cast("long")
+
+
+def _band_explode(df: DataFrame, band_keys: list[Column],
+                  carry: tuple[str, ...] = ()) -> DataFrame:
+    """(id, *carry, band, key): one row per id and band, ``key`` being
+    ``band_keys[band]``.  One explode over the input instead of a union
+    of per-band branches (a union would recompute the input per band)."""
+    bb = F.explode(F.array(*[
+        F.struct(F.lit(b).alias("band"), key.alias("key"))
+        for b, key in enumerate(band_keys)])).alias("bb")
+    return (df.select("id", *carry, bb)
+            .select("id", *carry, "bb.band", "bb.key"))
+
+
+def _drop_hot(buckets: DataFrame, keys: list[str],
+              hot: Column) -> DataFrame:
+    """Block purging: drop every row of a bucket for which ``hot`` holds.
+
+    ``hot`` is a Column over ``n_ids``, the bucket's row count from
+    ``groupBy(keys).count()``; it may hold a window (it is evaluated in
+    a ``select``, where Spark allows one).  The hot keys are excluded
+    with a broadcast anti-join, the oracles' ``LEFT JOIN hot ... WHERE
+    h IS NULL``.
+
+    Recall statement: a pair is missed only if every band it agrees on
+    is hot (for n-gram Jaccard: every shingle it shares), so reported
+    pairs are a deterministic subset of the uncapped ones.  A bucket
+    holding at most ``cap`` ids yields at most ``cap^2`` candidate
+    pairs, so the cap bounds the self-join that follows.  Buckets a cap
+    drops on a real crawl are boilerplate (error pages, parked
+    domains): exact-dup cliques that ``exact_duplicate_groups`` handles
+    in linear time.
+
+    Broadcast bound: the hot list holds at most ``rows / cap`` keys,
+    ``rows`` being the bucket table's (``n_docs * bands`` when banded;
+    the near-dup factor cap allows at most ``bands * 2^planes_per_band``
+    keys).  A 10^9-doc boilerplate-heavy corpus with a small absolute
+    cap can in principle exceed the broadcast budget; at that scale
+    raise the cap or swap the broadcast for a shuffled anti-join (same
+    result, one more exchange).
+    """
+    counts = buckets.groupBy(*keys).agg(F.count("*").alias("n_ids"))
+    hot_keys = (counts.select(*keys, hot.alias("_hot"))
+                .filter(F.col("_hot")).select(*keys))
+    return buckets.join(F.broadcast(hot_keys), keys, "left_anti")
+
+
+def _bucket_self_join(buckets: DataFrame, keys: list[str],
+                      carry: tuple[str, ...] = ()) -> DataFrame:
+    """(id_a, id_b, *{c}_a, *{c}_b): every pair of ids sharing a bucket,
+    ``id_a < id_b``, once per shared bucket; each ``carry`` column comes
+    through as ``{c}_a`` / ``{c}_b``."""
+    cond = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+    return (buckets.alias("l")
+            .join(buckets.alias("r"), cond + [F.col("l.id") < F.col("r.id")])
+            .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"),
+                    *[F.col(f"l.{c}").alias(f"{c}_a") for c in carry],
+                    *[F.col(f"r.{c}").alias(f"{c}_b") for c in carry]))
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", n_hashes: int = 8,
                       bands: int = 4, k: int = 3,
-                      max_bucket: int | None = None,
-                      hash_fn: str = "md5") -> DataFrame:
+                      max_bucket: int | None = None) -> DataFrame:
     """Banded LSH: docs agreeing on ALL rows of any band become a pair.
 
     Scale shape: one narrow shuffle keyed on (band, hash-of-band-rows);
@@ -169,23 +216,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     boilerplate-skewed - error pages and parked domains put millions of
     near-identical docs into ONE band bucket, and the uncapped self-join
     materializes bucket_size^2 candidate rows (quadratic blowup at
-    10^9 docs).  The cap bounds the hottest bucket at max_bucket^2
-    pairs.  Recall statement: a pair is missed only if EVERY band it
-    agrees on is hot, so reported pairs are a deterministic subset -
-    the same lower-bound trade as ``simhash_hamming_pairs(max_bucket=)``
-    and ``ngram_jaccard_pairs(max_df=)``.  The hot list (count > cap)
-    is tiny by construction, so the exclusion is a broadcast anti-join,
-    not an extra shuffle.  Mega-buckets dropped here are exact-dup
-    cliques anyway - route them through ``exact_duplicate_groups``,
-    which handles them in linear time.
-
-    Broadcast worst case: the hot list is bounded by
-    ``n_docs * bands / max_bucket`` rows (every bucket exactly at the
-    cap), so with max_bucket=50 a 10^9-doc boilerplate-heavy corpus can
-    in principle exceed the driver/broadcast budget; at that scale
-    raise ``max_bucket`` (the cap is per-bucket pairs-budget, not a
-    small constant) or swap the broadcast for a shuffle anti-join -
-    identical semantics, one more exchange.
+    10^9 docs).  Recall statement and broadcast bound: see
+    :func:`_drop_hot`.
     """
     rows_per = n_hashes // bands
     # lazy localCheckpoint = reuse barrier over the signature
@@ -195,41 +227,22 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # simhash_hamming_pairs - and the recompute measured 3.7 -> 3.1s at
     # sf1.0, 2.3 -> 2.0s at sf0.1 against block reuse).  Durability
     # trade as in connected_components' single-box default.
-    sigs = minhash_signature_df(df, text_col, id_col, n_hashes, k,
-                                hash_fn=hash_fn).localCheckpoint(eager=False)
-    # one pass: explode (band, bucket-hash) pairs instead of unioning
-    # per-band branches (a union would recompute the signatures per band)
-    band_structs = []
-    for b in range(bands):
-        cols = [F.col(f"mh{i}") for i in range(b * rows_per, (b + 1) * rows_per)]
-        band_structs.append(F.struct(
-            F.lit(b).alias("band"),
-            F.md5(F.concat_ws(",", *[c.cast("string") for c in cols]))
-            .alias("bucket")))
-    buckets = (sigs
-               .select("id", F.explode(F.array(*band_structs)).alias("bb"))
-               .select("id", F.col("bb.band").alias("band"),
-                       F.col("bb.bucket").alias("bucket")))
+    sigs = minhash_signature_df(df, text_col, id_col, n_hashes,
+                                k).localCheckpoint(eager=False)
+    buckets = _band_explode(sigs, [
+        F.md5(F.concat_ws(",", *[F.col(f"mh{i}").cast("string") for i in
+                                 range(b * rows_per, (b + 1) * rows_per)]))
+        for b in range(bands)])
     if max_bucket is not None:
-        hot = (buckets.groupBy("band", "bucket")
-               .agg(F.count("*").alias("n_ids"))
-               .filter(F.col("n_ids") > max_bucket)
-               .select("band", "bucket"))
-        buckets = buckets.join(F.broadcast(hot), ["band", "bucket"],
-                               "left_anti")
-    left = buckets.alias("l")
-    right = buckets.alias("r")
-    return (left.join(right, [F.col("l.band") == F.col("r.band"),
-                              F.col("l.bucket") == F.col("r.bucket"),
-                              F.col("l.id") < F.col("r.id")])
-            .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-            .distinct())
+        buckets = _drop_hot(buckets, ["band", "key"],
+                            F.col("n_ids") > max_bucket)
+    return _bucket_self_join(buckets, ["band", "key"]).distinct()
 
 
 SIMHASH_BITS = 60  # md5_long is 60 bits
 
 
-def simhash64(text: Column, k: int = 1, hash_fn: str = "md5") -> Column:
+def simhash64(text: Column, k: int = 1) -> Column:
     """60-bit SimHash over word shingles.
 
     bit_j(doc) = sign( sum over shingles of (bit_j(h(s)) ? +1 : -1) );
@@ -245,7 +258,7 @@ def simhash64(text: Column, k: int = 1, hash_fn: str = "md5") -> Column:
     amount while the PySpark wrapper only takes a Python int.
     """
     sh = shingles(text, k)
-    hashed = F.transform(sh, lambda s: _mh(s, 0, hash_fn))
+    hashed = F.transform(sh, lambda s: _mh(s, 0))
     bit_index = F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1))
     votes = F.aggregate(
         hashed,
@@ -265,8 +278,7 @@ def simhash64(text: Column, k: int = 1, hash_fn: str = "md5") -> Column:
 
 
 def simhash64_df(df: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id", k: int = 1,
-                 hash_fn: str = "md5") -> DataFrame:
+                 id_col: str = "doc_id", k: int = 1) -> DataFrame:
     """(id, sig): the 60-bit SimHash as ONE explode + hash-aggregate.
 
     :func:`simhash64` is a per-row ``aggregate`` fold whose inner
@@ -292,7 +304,7 @@ def simhash64_df(df: DataFrame, text_col: str = "text",
     exploded = base.select(
         "id", "_tn", F.explode_outer(shingles(F.col("_t"), k)).alias("_s"))
     hashed = exploded.select(
-        "id", "_tn", _mh(F.col("_s"), 0, hash_fn).alias("_h"))
+        "id", "_tn", _mh(F.col("_s"), 0).alias("_h"))
     aggs = [F.count(F.col("_h")).alias("_n")] + [
         F.sum(F.shiftright(F.col("_h"), j).bitwiseAND(F.lit(1))
               .cast("int")).alias(f"_sb{j}")
@@ -311,8 +323,7 @@ def simhash64_df(df: DataFrame, text_col: str = "text",
 def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id", k: int = 1,
                           bands: int = 4, max_hamming: int = 3,
-                          max_bucket: int | None = None,
-                          hash_fn: str = "md5") -> DataFrame:
+                          max_bucket: int | None = None) -> DataFrame:
     """Hamming-near pairs over the 60-bit SimHash - banded bit-chunk LSH.
 
     The signature is split into ``bands`` equal bit chunks; by pigeonhole,
@@ -327,14 +338,10 @@ def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
     ``max_bucket``: drop (band, chunk) buckets holding more than
     ``max_bucket`` ids before the self-join.  15-bit chunks give only
     32768 buckets per band, so at 10^9 docs the MEAN bucket holds ~3*10^4
-    ids and the self-join materializes ~10^13 candidates without a bound;
-    the cap keeps the hottest bucket at max_bucket^2 pairs.  Recall
-    statement: a pair is missed only if EVERY chunk it agrees on is hot -
-    pairs with at least one non-hot agreeing chunk keep the pigeonhole
-    guarantee, so reported pairs are a deterministic subset (the same
-    lower-bound trade as ``ngram_jaccard_pairs``'s ``max_df``).  The hot
-    list (df > cap) is tiny, so the exclusion is a broadcast anti-join,
-    not a shuffle.
+    ids and the self-join materializes ~10^13 candidates without a bound.
+    Pairs with at least one non-hot agreeing chunk keep the pigeonhole
+    guarantee; recall statement and broadcast bound: see
+    :func:`_drop_hot`.
     """
     if bands <= max_hamming:
         raise ValueError("bands must exceed max_hamming for full recall")
@@ -352,30 +359,15 @@ def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
     # Single-box durability trade as in connected_components' default:
     # executor loss after materialization fails the job - acceptable
     # for an intra-query intermediate any retry recomputes from source.
-    sigs = simhash64_df(df, text_col=text_col, id_col=id_col, k=k,
-                        hash_fn=hash_fn).localCheckpoint(eager=False)
-    chunks = F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.shiftright(F.col("sig"), b * width)
-                 .bitwiseAND(F.lit(mask)).alias("chunk"))
-        for b in range(bands)])
-    buckets = (sigs.select("id", "sig", F.explode(chunks).alias("bb"))
-               .select("id", "sig", F.col("bb.band").alias("band"),
-                       F.col("bb.chunk").alias("chunk")))
+    sigs = simhash64_df(df, text_col=text_col, id_col=id_col,
+                        k=k).localCheckpoint(eager=False)
+    buckets = _band_explode(sigs, [
+        F.shiftright(F.col("sig"), b * width).bitwiseAND(F.lit(mask))
+        for b in range(bands)], carry=("sig",))
     if max_bucket is not None:
-        hot = (buckets.groupBy("band", "chunk")
-               .agg(F.count("*").alias("n_ids"))
-               .filter(F.col("n_ids") > max_bucket)
-               .select("band", "chunk"))
-        buckets = buckets.join(F.broadcast(hot), ["band", "chunk"],
-                               "left_anti")
-    return (buckets.alias("l")
-            .join(buckets.alias("r"),
-                  [F.col("l.band") == F.col("r.band"),
-                   F.col("l.chunk") == F.col("r.chunk"),
-                   F.col("l.id") < F.col("r.id")])
-            .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"),
-                    F.col("l.sig").alias("sig_a"), F.col("r.sig").alias("sig_b"))
+        buckets = _drop_hot(buckets, ["band", "key"],
+                            F.col("n_ids") > max_bucket)
+    return (_bucket_self_join(buckets, ["band", "key"], carry=("sig",))
             .withColumn("hamming",
                         F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
                         .cast("long"))
@@ -400,12 +392,11 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
 
     ``max_df``: drop shingles shared by more than ``max_df`` documents
     before the self-join.  Without a cap, one stop-shingle shared by 1M
-    docs creates a ~10^12-row join bucket at 100 TB; with it, the hottest
-    bucket is bounded at max_df^2 pairs.  Capped shingles no longer count
-    toward intersections (denominator sizes stay full-set), so reported
-    jaccard is a lower bound for pairs that shared a hot shingle - the
-    standard blocking trade.  The hot-shingle list is tiny (df > cap), so
-    the exclusion is a broadcast anti-join, not a shuffle.
+    docs creates a ~10^12-row join bucket at 100 TB.  Capped shingles no
+    longer count toward intersections (denominator sizes stay full-set),
+    so reported jaccard is a lower bound for pairs that shared a hot
+    shingle - the standard blocking trade; recall statement and
+    broadcast bound: see :func:`_drop_hot`.
     """
     base = ensure_scan_parallelism(
         df.select(F.col(id_col).alias("id"),
@@ -416,14 +407,9 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     sizes = toks.groupBy("id").agg(F.count("*").alias("n"))
     join_toks = toks
     if max_df is not None:
-        hot = (toks.groupBy("sh").agg(F.count("*").alias("df"))
-               .filter(F.col("df") > max_df).select("sh"))
-        join_toks = toks.join(F.broadcast(hot), "sh", "left_anti")
-    inter = (join_toks.alias("a")
-             .join(join_toks.alias("b"),
-                   [F.col("a.sh") == F.col("b.sh"),
-                    F.col("a.id") < F.col("b.id")])
-             .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        join_toks = _drop_hot(toks, ["sh"], F.col("n_ids") > max_df)
+    inter = (_bucket_self_join(join_toks, ["sh"])
+             .groupBy("id_a", "id_b")
              .agg(F.count("*").alias("n_common")))
     return (inter
             .join(sizes.withColumnRenamed("id", "id_a")

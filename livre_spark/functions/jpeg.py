@@ -64,10 +64,6 @@ _DCT = _COS * np.sqrt(2 / 8)
 _DCT[0] = np.sqrt(1 / 8)  # orthonormal DCT-II basis rows
 
 
-def idct2(block: np.ndarray) -> np.ndarray:
-    return _DCT.T @ block @ _DCT
-
-
 def dct2(block: np.ndarray) -> np.ndarray:
     return _DCT @ block @ _DCT.T
 

@@ -555,7 +555,6 @@ _RESCORE_SLICE = 1 << 15
 def cosine_near_dup_pairs_lsh(embeddings: DataFrame, dim: int,
                               threshold: float = 0.95, bands: int = 4,
                               planes_per_band: int = 2, seed: int = 42,
-                              max_bucket: int | None = None,
                               max_bucket_factor: float | None = None,
                               id_col: str = "vec_id",
                               vec_col: str = "embedding") -> DataFrame:
@@ -573,33 +572,20 @@ def cosine_near_dup_pairs_lsh(embeddings: DataFrame, dim: int,
     uniform data puts ``n / 2^planes_per_band`` ids in EVERY bucket and
     the self-join is O(n^2 / 2^planes_per_band) - the cure for uniform
     mass is ``planes_per_band ~ log2(n) - log2(target_bucket)`` (e.g.
-    ~20 planes for 10^9 rows and ~1000-id buckets), NOT a cap.  The caps
-    below bound the *skew* a plane count cannot fix (degenerate/
-    all-zero embedding clusters piling into one bucket):
-
-    ``max_bucket``: drop (band, chunk) buckets holding more than this
-    many ids before scoring - the same bound as
-    ``simhash_hamming_pairs``.  Absolute, so right when the caller knows
-    the bucket budget.
+    ~20 planes for 10^9 rows and ~1000-id buckets), NOT a cap.  The cap
+    below bounds the *skew* a plane count cannot fix (degenerate/
+    all-zero embedding clusters piling into one bucket).
 
     ``max_bucket_factor``: drop buckets holding more than
-    ``factor * n / 2^planes_per_band`` ids (factor x the uniform share).
-    Scale-free skew guard: on uniform data it drops nothing at ANY n,
-    while a degenerate cluster exceeding factor x its fair share is
-    excluded.  The per-band total (= n) comes from a window over the
-    already-aggregated bucket counts - no second scan, no scalar join.
-
-    Both caps report a deterministic SUBSET: a pair is missed only if
-    every band it agrees on is hot (same trade as max_df in
-    ``ngram_jaccard_pairs``).  Dropping hot buckets is one step before
-    scoring: a ``(band, chunk)`` count aggregate plus a per-band window
-    (the hot criterion, written once as Spark expressions mirroring the
-    oracle SQL) yields the hot rows - at most ``bands *
-    2^planes_per_band`` - which are collected and applied as a literal
-    key filter.
+    ``factor * n / 2^planes_per_band`` ids (factor x the uniform share)
+    before scoring.  Scale-free skew guard: on uniform data it drops
+    nothing at ANY n, while a degenerate cluster exceeding factor x its
+    fair share is excluded.  The per-band total (= n) is a window over
+    the bucket counts, so the cap is one :func:`dedup._drop_hot` step -
+    recall statement and broadcast bound there.
 
     Plan shape (guide sections 2.3/2.4/4.2): one explode (x bands) of
-    (id, band, chunk, vec), then each (band, chunk) bucket is scored by
+    (id, vec, band, key), then each (band, key) bucket is scored by
     a VECTORIZED native kernel (grouped ``applyInArrow`` + numpy GEMM)
     instead of a relational self-join.  A self-join shape shuffles the
     FULL O(sum bucket^2) candidate set through a ``distinct`` and pays
@@ -625,6 +611,8 @@ def cosine_near_dup_pairs_lsh(embeddings: DataFrame, dim: int,
     (_ND_BLOCKS + 1) / 2`` tasks instead of one.  Never a cross join;
     the all-pairs variant below is the small-scale twin.
     """
+    from .dedup import _band_explode, _drop_hot
+
     planes = hyperplanes(dim, bands * planes_per_band, seed)
     # parallelize BEFORE the signature folds: the interpreted per-plane
     # fold costs ~80 us/row and is evaluated by the work frame AND the
@@ -633,46 +621,23 @@ def cosine_near_dup_pairs_lsh(embeddings: DataFrame, dim: int,
     src = ensure_scan_parallelism(
         embeddings.select(F.col(id_col).alias("id"),
                           F.col(vec_col).alias("v")))
-    buckets = (src
-               .select("id", "v",
-                       F.explode(F.array(*[
-                           F.struct(F.lit(b).alias("band"),
-                                    lsh_signature(
-                                        F.col("v"),
-                                        planes[b * planes_per_band:
-                                               (b + 1) * planes_per_band])
-                                    .alias("chunk"))
-                           for b in range(bands)])).alias("bb"))
-               .select("id", "v",
-                       F.col("bb.band").alias("band"),
-                       F.col("bb.chunk").alias("chunk")))
-    if max_bucket is not None or max_bucket_factor is not None:
+    buckets = _band_explode(src, [
+        lsh_signature(F.col("v"),
+                      planes[b * planes_per_band:(b + 1) * planes_per_band])
+        for b in range(bands)], carry=("v",))
+    if max_bucket_factor is not None:
         # the cap needs a counting pass over buckets before the scoring
         # pass; a lazy localCheckpoint materializes the (id, vec, band,
-        # chunk) frame once so the signature folds are not recomputed
+        # key) frame once so the signature folds are not recomputed
         # by the second consumer (same durability trade as the dedup
         # pairs functions)
         buckets = buckets.localCheckpoint(eager=False)
-        counts = (buckets.groupBy("band", "chunk")
-                  .agg(F.count("*").alias("n_ids")))
-        hot_cond = F.lit(False)
-        if max_bucket is not None:
-            hot_cond = hot_cond | (F.col("n_ids") > max_bucket)
-        if max_bucket_factor is not None:
-            # each id appears exactly once per band, so the band total
-            # IS n
-            band_total = F.sum("n_ids").over(Window.partitionBy("band"))
-            counts = counts.withColumn(
-                "uniform_cap",
-                band_total * max_bucket_factor / (2 ** planes_per_band))
-            hot_cond = hot_cond | (F.col("n_ids") > F.col("uniform_cap"))
-        hot_keys = [r["band"] * (1 << 60) + r["chunk"] for r in
-                    counts.filter(hot_cond).select("band", "chunk")
-                    .collect()]
-        if hot_keys:
-            buckets = buckets.filter(
-                ~(F.col("band").cast("long") * F.lit(1 << 60)
-                  + F.col("chunk")).isin(hot_keys))
+        # each id appears exactly once per band, so the band total IS n
+        band_total = F.sum("n_ids").over(Window.partitionBy("band"))
+        buckets = _drop_hot(
+            buckets, ["band", "key"],
+            F.col("n_ids")
+            > band_total * max_bucket_factor / (2 ** planes_per_band))
     # deterministic block per id (placement only - never in results),
     # every row replicated to each block pair it participates in
     blk = F.pmod(F.xxhash64(F.col("id")), F.lit(_ND_BLOCKS))
@@ -684,13 +649,13 @@ def cosine_near_dup_pairs_lsh(embeddings: DataFrame, dim: int,
             F.when(blk < j, F.lit("a")).when(blk > j, F.lit("b"))
             .otherwise(F.lit("x")).alias("side")))
     work = (buckets
-            .select("id", "v", "band", "chunk",
+            .select("id", "v", "band", "key",
                     F.explode(F.array(*entries)).alias("e"))
-            .select("id", "v", "band", "chunk",
+            .select("id", "v", "band", "key",
                     F.col("e.lo").alias("lo"), F.col("e.hi").alias("hi"),
                     F.col("e.side").alias("side")))
     id_type = embeddings.schema[id_col].dataType.simpleString()
-    return (work.groupBy("band", "chunk", "lo", "hi")
+    return (work.groupBy("band", "key", "lo", "hi")
             .applyInArrow(_block_pair_scorer(threshold, dim),
                           schema=f"id_a {id_type}, id_b {id_type},"
                                  f" cos_sim double")
@@ -707,7 +672,7 @@ def _round6(x: float) -> float:
 
 
 def _block_pair_scorer(threshold: float, dim: int):
-    """Arrow kernel scoring one (band, chunk, block-lo, block-hi)
+    """Arrow kernel scoring one (band, key, block-lo, block-hi)
     group: GEMM + error-bounded candidate mask, exact sequential-fold
     rescore of candidates (see cosine_near_dup_pairs_lsh).
 

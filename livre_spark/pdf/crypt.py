@@ -175,66 +175,12 @@ def _expand_key(key: bytes) -> list[list[int]]:
     return [sum(w[r * 4 : r * 4 + 4], []) for r in range(nr + 1)]
 
 
-def _expand_key_128(key: bytes) -> list[list[int]]:
-    return _expand_key(key)
-
-
-def _aes_encrypt_block(rk: list[list[int]], block: bytes) -> bytes:
-    nr = len(rk) - 1
-    # the 16-byte block IS the column-major state: byte i = (row i%4, col i//4)
-    s = [b ^ k for b, k in zip(block, rk[0])]
-    for rnd in range(1, nr + 1):
-        s = [_SBOX[b] for b in s]
-        # ShiftRows on column-major byte order: byte i sits at
-        # (row, col) = (i % 4, i // 4); row r rotates left by r
-        s = [s[(i + 4 * (i % 4)) % 16] for i in range(16)]
-        if rnd < nr:
-            t = []
-            for c in range(4):
-                col = s[4 * c : 4 * c + 4]
-                t += [
-                    _xtime(col[0]) ^ _xtime(col[1]) ^ col[1] ^ col[2] ^ col[3],
-                    col[0] ^ _xtime(col[1]) ^ _xtime(col[2]) ^ col[2] ^ col[3],
-                    col[0] ^ col[1] ^ _xtime(col[2]) ^ _xtime(col[3]) ^ col[3],
-                    _xtime(col[0]) ^ col[0] ^ col[1] ^ col[2] ^ _xtime(col[3]),
-                ]
-            s = t
-        s = [b ^ k for b, k in zip(s, rk[rnd])]
-    return bytes(s)
-
-
-def _aes_decrypt_block(rk: list[list[int]], block: bytes) -> bytes:
-    nr = len(rk) - 1
-    s = [b ^ k for b, k in zip(block, rk[nr])]
-    for rnd in range(nr - 1, -1, -1):
-        # InvShiftRows: row r rotates right by r
-        s = [s[(i - 4 * (i % 4)) % 16] for i in range(16)]
-        s = [_INV_SBOX[b] for b in s]
-        s = [b ^ k for b, k in zip(s, rk[rnd])]
-        if rnd > 0:
-            t = []
-            for c in range(4):
-                col = s[4 * c : 4 * c + 4]
-                t += [
-                    _gmul(col[0], 14) ^ _gmul(col[1], 11)
-                    ^ _gmul(col[2], 13) ^ _gmul(col[3], 9),
-                    _gmul(col[0], 9) ^ _gmul(col[1], 14)
-                    ^ _gmul(col[2], 11) ^ _gmul(col[3], 13),
-                    _gmul(col[0], 13) ^ _gmul(col[1], 9)
-                    ^ _gmul(col[2], 14) ^ _gmul(col[3], 11),
-                    _gmul(col[0], 11) ^ _gmul(col[1], 13)
-                    ^ _gmul(col[2], 9) ^ _gmul(col[3], 14),
-                ]
-            s = t
-    return bytes(s)
-
-
 # T-table AES: one 32-bit word lookup per state byte instead of per-byte
 # GF arithmetic (~10x in pure Python - the Algorithm 2.B KDF runs ~16k
 # block encryptions per password check, and 2% of the crawl corpus pays
-# CBC decryption per stream).  Validated against the scalar path and the
-# FIPS-197 vectors in tests/test_filters.py; a production deployment
-# would swap in a C AES behind these same two functions.
+# CBC decryption per stream).  Pinned by the FIPS-197 vectors in
+# tests/test_filters.py; libcrypto's EVP AES (below) runs first when
+# present, and these two functions are its fallback.
 
 
 def _rotr32(x: int, n: int) -> int:
@@ -369,6 +315,7 @@ def _load_libcrypto():
         lib.EVP_CipherInit_ex.restype = ctypes.c_int
         lib.EVP_CipherInit_ex.argtypes = [
             P, P, P, ctypes.c_char_p, ctypes.c_char_p, ctypes.c_int]
+        lib.EVP_CIPHER_CTX_set_padding.restype = ctypes.c_int
         lib.EVP_CIPHER_CTX_set_padding.argtypes = [P, ctypes.c_int]
         lib.EVP_CipherUpdate.restype = ctypes.c_int
         lib.EVP_CipherUpdate.argtypes = [
@@ -387,7 +334,7 @@ def _load_libcrypto():
             outl = ctypes.c_int(0)
             ok = (lib.EVP_CipherInit_ex(ctx, lib.EVP_aes_128_cbc(), None,
                                         key, b"\x00" * 16, 1)
-                  and lib.EVP_CIPHER_CTX_set_padding(ctx, 0) is not None
+                  and lib.EVP_CIPHER_CTX_set_padding(ctx, 0)
                   and lib.EVP_CipherUpdate(ctx, out, ctypes.byref(outl),
                                            pt, 16))
             if not ok or out.raw[:16] != bytes.fromhex(
@@ -498,7 +445,8 @@ def _evp_aes_cbc_nopad(key: bytes, iv: bytes, data: bytes,
         if not lib.EVP_CipherInit_ex(ctx, cipher, None, key, iv,
                                      1 if enc else 0):
             return None
-        lib.EVP_CIPHER_CTX_set_padding(ctx, 0)
+        if not lib.EVP_CIPHER_CTX_set_padding(ctx, 0):
+            return None
         out = ctypes.create_string_buffer(len(data) + 16)
         outl = ctypes.c_int(0)
         if not lib.EVP_CipherUpdate(ctx, out, ctypes.byref(outl),

@@ -34,12 +34,3 @@ class CutError(ParseError):
     re-raise it instead of trying the next branch, mirroring the
     reference's cut on e.g. unsupported filters (filtering.rs:50-53).
     """
-
-
-class ContentError(ParseError):
-    """Errors from the content-stream text state machine.
-
-    Mirrors /root/reference/src/content/error.rs:6-12:
-    ``UnexpectedTextShowingOperator`` (show op before Tf) and
-    ``IncompleteTextObject`` (BT never followed by Tf).
-    """

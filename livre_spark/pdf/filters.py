@@ -75,10 +75,6 @@ def asciihex_decode(data: bytes) -> bytes:
     return bytes.fromhex(cleaned.decode("ascii"))
 
 
-def asciihex_encode(data: bytes) -> bytes:
-    return data.hex().encode("ascii").upper() + b">"
-
-
 def ascii85_decode(data: bytes) -> bytes:
     """ASCII85Decode per PDF 32000-1 7.4.3: base-85 groups of 5 chars
     ``!``..``u`` -> 4 bytes big-endian; ``z`` = four zero bytes (only at a

@@ -287,15 +287,16 @@ def test_decryptor_roundtrip_and_wrong_password():
 def test_aes_fips197_vector():
     """FIPS-197 Appendix B: the canonical AES-128 block vector."""
     from livre_spark.pdf.crypt import (
-        _aes_decrypt_block, _aes_encrypt_block, _expand_key_128,
+        _aes_decrypt_block_fast, _aes_encrypt_block_fast, _expand_key,
+        _rk_words, _rk_words_dec,
     )
 
     key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     ct = bytes.fromhex("69c4e0d86a7b0430d8cdb78070b4c55a")
-    rk = _expand_key_128(key)
-    assert _aes_encrypt_block(rk, pt) == ct
-    assert _aes_decrypt_block(rk, ct) == pt
+    rk = _expand_key(key)
+    assert _aes_encrypt_block_fast(_rk_words(rk), pt) == ct
+    assert _aes_decrypt_block_fast(_rk_words_dec(rk), ct) == pt
 
 
 def test_aes_cbc_roundtrip_and_padding():
@@ -317,7 +318,8 @@ def test_aes_cbc_roundtrip_and_padding():
 def test_aes256_fips197_vector():
     """FIPS-197 Appendix C.3: the canonical AES-256 block vector."""
     from livre_spark.pdf.crypt import (
-        _aes_decrypt_block, _aes_encrypt_block, _expand_key,
+        _aes_decrypt_block_fast, _aes_encrypt_block_fast, _expand_key,
+        _rk_words, _rk_words_dec,
     )
 
     key = bytes.fromhex("000102030405060708090a0b0c0d0e0f"
@@ -325,8 +327,8 @@ def test_aes256_fips197_vector():
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     ct = bytes.fromhex("8ea2b7ca516745bfeafc49904b496089")
     rk = _expand_key(key)
-    assert _aes_encrypt_block(rk, pt) == ct
-    assert _aes_decrypt_block(rk, ct) == pt
+    assert _aes_encrypt_block_fast(_rk_words(rk), pt) == ct
+    assert _aes_decrypt_block_fast(_rk_words_dec(rk), ct) == pt
 
 
 def test_r6_key_unwrap_roundtrip():

@@ -238,10 +238,10 @@ def test_cosine_near_dup_pairs_lsh_recall(spark, embeddings):
 
 
 def test_cosine_near_dup_lsh_bucket_caps(spark):
-    """Both bucket caps bound a degenerate cluster: 40 identical vectors
+    """The bucket cap bounds a degenerate cluster: 40 identical vectors
     pile into one bucket per band (~87% of each band), far above 3x the
-    uniform share AND an absolute cap, so their pairs are excluded while
-    the well-spread near-dup pair survives (its buckets stay cold)."""
+    uniform share, so their pairs are excluded while the well-spread
+    near-dup pair survives (its buckets stay cold)."""
     rows = [(i, [1.0, 1.0, 1.0, 1.0]) for i in range(100, 140)]
     rows += [(0, [1.0, 0.05, 0.0, 0.0]), (1, [1.0, 0.0, 0.05, 0.0]),
              (2, [0.0, -1.0, 0.3, 0.0]), (3, [-1.0, 0.0, 0.0, 0.3]),
@@ -257,10 +257,28 @@ def test_cosine_near_dup_lsh_bucket_caps(spark):
     uncapped = pairs()
     hot_pairs = {(a, b) for a, b in uncapped if a >= 100 and b >= 100}
     assert len(hot_pairs) == 40 * 39 // 2    # the degenerate cluster
-    for capped in (pairs(max_bucket_factor=3.0), pairs(max_bucket=30)):
-        assert not any(a >= 100 and b >= 100 for a, b in capped)
-        assert capped <= uncapped             # caps never invent pairs
-        assert (0, 1) in capped               # cold-bucket pair survives
+    capped = pairs(max_bucket_factor=3.0)
+    assert not any(a >= 100 and b >= 100 for a, b in capped)
+    assert capped <= uncapped                 # the cap never invents pairs
+    assert (0, 1) in capped                   # cold-bucket pair survives
+
+
+def test_cosine_near_dup_lsh_cap_is_lazy(spark):
+    """Building the capped near-dup frame starts no Spark job: the hot
+    buckets are dropped inside the plan, not collected while the frame
+    is built."""
+    rows = [(i, [1.0, float(i % 3), 0.0, -1.0]) for i in range(12)]
+    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    sc = spark.sparkContext
+    group = "near-dup-cap-lazy"
+    sc.setJobGroup(group, "build the capped near-dup frame")
+    try:
+        sim.cosine_near_dup_pairs_lsh(df, dim=4, threshold=0.95, bands=4,
+                                      planes_per_band=2,
+                                      max_bucket_factor=3.0)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc._jsc.clearJobGroup()
 
 
 @pytest.mark.parametrize("dim", [16, 256])
@@ -360,28 +378,6 @@ def test_topk_cosine_many_ivf_and_autoroute(spark, tmp_path):
     assert "FileScan" not in unrouted._jdf.queryExecution() \
         .executedPlan().toString()
     assert as_map(unrouted) == as_map(exact)
-
-
-def test_hash_fn_knob_xxhash64(spark, docs):
-    """The production hash knob: xxhash64 variants run end-to-end and
-    yield structurally-valid outputs (values differ from md5 by design)."""
-    import pyspark.sql.functions as F
-
-    from livre_spark.functions import dedup as dd
-
-    sig = docs.select(
-        "doc_id", dd.simhash64(F.col("text"), 1, "xxhash64").alias("s"))
-    rows = sig.collect()
-    assert len(rows) == docs.count()
-    assert all(0 <= r["s"] < (1 << 60) for r in rows)
-    pairs = dd.simhash_hamming_pairs(docs, k=1, bands=4,
-                                     max_hamming=3, max_bucket=50,
-                                     hash_fn="xxhash64")
-    assert pairs.columns == ["id_a", "id_b", "hamming"]
-    assert pairs.count() >= 0
-    mh = dd.minhash_signature_df(docs, "text", "doc_id", 4, 3,
-                                 hash_fn="xxhash64")
-    assert mh.filter("mh0 < -1").count() == 0  # range respected
 
 
 def test_connected_components_chain_and_nonconvergence(spark):

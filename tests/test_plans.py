@@ -68,12 +68,15 @@ def test_whole_stage_codegen_active(spark):
     assert "isFinalPlan=true" in plan and "*(" in plan
 
 
-def test_minhash_lsh_cap_is_broadcast_anti_join(spark):
-    """The round-6 hot-bucket cap must stay a BROADCAST anti-join
-    ahead of the bucket self-join (a shuffled anti-join would add a
-    full shuffle of the bucket table at 100 TB), and no cross join may
-    appear."""
-    plan = _plan(em.queries()["dedup_minhash_lsh"](spark, SF_DIR))
+@pytest.mark.parametrize("name", ["dedup_minhash_lsh",
+                                  "dedup_simhash_pairs",
+                                  "dedup_ngram_jaccard", "sim_near_dup"])
+def test_hot_bucket_cap_is_broadcast_anti_join(spark, name):
+    """Every capped LSH query drops its hot buckets with a BROADCAST
+    anti-join ahead of the bucket comparison (a shuffled anti-join would
+    add a full shuffle of the bucket table at 100 TB), and no cross join
+    may appear."""
+    plan = _plan(em.queries()[name](spark, SF_DIR))
     assert "LeftAnti, BuildRight" in plan or (
         "BroadcastHashJoin" in plan and "LeftAnti" in plan), plan
     assert "CartesianProduct" not in plan
