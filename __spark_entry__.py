@@ -669,16 +669,8 @@ def q_sim_topk(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     query = emb.filter(F.col("vec_id") == 0) \
         .select(F.col("embedding").alias("qv"))
-    paired = (emb.filter(F.col("vec_id") != 0)
-              .crossJoin(F.broadcast(query))
-              .select("vec_id", "embedding", "qv"))
-    # Arrow-vectorized exact scorer (bit-identical to the interpreted
-    # fold; rounding stays in the JVM) - see sim.cosine_rows_arrow
-    return (sim.cosine_rows_arrow(paired, "embedding", "qv")
-            .select("vec_id",
-                    F.round(F.col("cos_raw"), 6).alias("cos_sim"))
-            .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-            .limit(10))
+    paired = emb.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(query))
+    return sim.topk_cosine(paired, "qv", k=10)
 
 
 SQL_SIM_TOPK = f"""
@@ -874,8 +866,8 @@ SQL_SIM_TOPK_IVF_INDEXED = SQL_SIM_TOPK_IVF
 
 def q_sim_topk_many_ivf(spark, sf_dir):
     """Batch ANN at scale: MANY queries against the materialized IVF
-    index in ONE partition-pruned scan (similarity.topk_cosine_many_ivf
-    - the route topk_cosine_many takes above its Q threshold).  Probe
+    index in ONE partition-pruned scan (similarity.topk_cosine_many_ivf;
+    similarity.topk_cosine_many is its exact, index-free twin).  Probe
     map computed driver-side, broadcast-joined ON cell so each vector
     scores only against the queries probing its cell; same seed
     centroids and sequential-fold math as the single-query IVF rows."""

@@ -40,12 +40,6 @@ from pyspark.sql.types import (
 
 from ..pdf.filters import apply_predictor
 
-MEDIA_SCHEMA = StructType([
-    StructField("media_id", LongType()),
-    StructField("kind", StringType()),        # image | audio | video
-    StructField("payload", StringType()),     # carried through
-])
-
 FEATURE_DIM = 16
 
 MEDIA_FEATURES_SCHEMA = StructType([

@@ -1,10 +1,10 @@
 """Similarity search over embedding columns (``array<float>``).
 
-- brute-force cosine top-k: the exact baseline.  ``zip_with`` +
-  ``aggregate`` keep the dot product inside whole-stage codegen (double
-  math, sequential fold - bit-reproducible against the DuckDB oracle).
-- LSH-bucketed ANN: deterministic random-hyperplane signatures prune the
-  candidate set; the scale path (bucket join instead of full scan).
+- cosine top-k: every operator is candidates (the whole frame, an LSH
+  bucket, IVF cells, a partition-pruned IVF index scan), then one
+  scorer per query shape (the Arrow kernel for one query, the
+  sequential SQL fold for many - both bit-reproducible against the
+  DuckDB oracle), then one ranking step (:func:`_rank`).
 - embedding near-duplicate pairs: all pairs above a cosine threshold.
 
 At 100 TB the brute-force path is a broadcast of the query vector and a
@@ -160,78 +160,95 @@ def cosine_rows_arrow(df: DataFrame, a_col: str, b_col: str | None = None,
     return df.mapInArrow(fn, out_schema)
 
 
-def topk_cosine(embeddings: DataFrame, query_vec: list[float], k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact top-k by cosine similarity to a literal query vector.
+def _rank(scored: DataFrame, k: int, id_col: str,
+          qid_col: str | None = None) -> DataFrame:
+    """Rank ``cos_sim`` descending, ties by ``id_col`` ascending.
 
-    Plan shape: scan -> Arrow scoring map -> TakeOrderedAndProject; no
-    shuffle, the top-k is merged on the driver from per-partition heaps.
-    The query vector is a kernel constant (not shipped per row);
-    rounding stays in the JVM so values match the fold bit-for-bit.
-
-    A zero-norm row scores NaN (0/0) and ranks FIRST: Spark orders NaN
-    above every number.  The DuckDB twin differs there - DuckDB 1.0
-    returns NULL for a double 0/0 and sorts it last - so zero-norm
-    rows are outside the oracle contract (no testdata row has one).
+    Without ``qid_col``: ``orderBy().limit()``, planned as
+    TakeOrderedAndProject (no shuffle).  With it: a ``row_number``
+    window per query, ranks ``<= k``, ``rank`` as a long.
     """
-    scored = cosine_rows_arrow(embeddings.select(F.col(id_col), vec_col),
-                               vec_col, const_b=query_vec)
-    return (scored
-            .select(F.col(id_col),
-                    F.round(F.col("cos_raw"), 6).alias("cos_sim"))
-            .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-            .limit(k))
-
-
-def topk_cosine_many(embeddings: DataFrame, queries: DataFrame,
-                     k: int = 10, id_col: str = "vec_id",
-                     vec_col: str = "embedding",
-                     qid_col: str = "qid",
-                     qvec_col: str = "qv",
-                     ivf_path: str | None = None,
-                     centroids: list[list[float]] | None = None,
-                     n_probe: int = 2,
-                     route_threshold: int = 64) -> DataFrame:
-    """Batch ANN: top-k per query vector, many queries in ONE scan.
-
-    Plan shape: scan -> broadcast nested-loop join against the (small)
-    query set - an O(n*Q) scoring map, not a shuffle - then one window
-    shuffle of the NARROW (qid, id, cos) projection for the per-query
-    top-k.  The window moves n*Q 24-byte rows, so the exact path stops
-    scaling with Q: when ``ivf_path``+``centroids`` are given AND the
-    query count exceeds ``route_threshold``, the call routes itself to
-    :func:`topk_cosine_many_ivf` (one partition-pruned scan of the
-    materialized index, each vector scored only against the queries
-    probing its cell - approximate, recall set by ``n_probe``).
-    Without an index the exact path is used regardless of Q.
-    """
-    if ivf_path is not None and centroids is not None:
-        # limit() bounds the routing probe: only threshold+1 rows of
-        # the queries frame are materialized, so a derived queries df
-        # (filter over a big table) doesn't pay a full scan just to
-        # decide the route
-        if queries.limit(route_threshold + 1).count() > route_threshold:
-            return topk_cosine_many_ivf(
-                embeddings.sparkSession, ivf_path, queries, centroids,
-                k=k, n_probe=n_probe, id_col=id_col, qid_col=qid_col,
-                qvec_col=qvec_col, vec_col=vec_col)
-    # NB: routing this fold through cosine_rows_arrow measured WORSE
-    # (0.73 -> 1.13 s at 20k x 3): the crossJoin output would ship BOTH
-    # vectors per (row, query) pair across the Python boundary, where
-    # the JVM fold scores the narrow join output in place.  Kept as the
-    # interpreted fold on purpose.
-    scored = (embeddings
-              .crossJoin(F.broadcast(queries))
-              .select(F.col(qid_col),
-                      F.col(id_col),
-                      F.round(cosine(F.col(vec_col), F.col(qvec_col)), 6)
-                      .alias("cos_sim")))
+    if qid_col is None:
+        return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
     w = Window.partitionBy(qid_col).orderBy(
         F.col("cos_sim").desc(), F.col(id_col))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select(qid_col, id_col, "cos_sim",
                     F.col("rank").cast("long").alias("rank")))
+
+
+def topk_cosine(embeddings: DataFrame, query_vec: list[float] | str,
+                k: int = 10, id_col: str = "vec_id",
+                vec_col: str = "embedding") -> DataFrame:
+    """Exact top-k by cosine similarity to one query vector - the
+    scorer and ranker of every single-query operator, which differ only
+    in the candidate frame they pass in.
+
+    ``query_vec`` is either a literal vector (a kernel constant, not
+    shipped per row) or the name of a vector column already on the
+    frame (e.g. a broadcast-cross-joined query row).
+
+    Plan shape: candidates -> Arrow scoring map -> TakeOrderedAndProject;
+    no shuffle.  Rounding stays in the JVM so values match the fold
+    bit-for-bit.
+
+    A zero-norm row scores NaN (0/0) and ranks FIRST: Spark orders NaN
+    above every number.  The DuckDB twin differs there - DuckDB 1.0
+    returns NULL for a double 0/0 and sorts it last - so zero-norm
+    rows are outside the oracle contract (no testdata row has one).
+    """
+    if isinstance(query_vec, str):
+        scored = cosine_rows_arrow(
+            embeddings.select(F.col(id_col), vec_col, query_vec),
+            vec_col, query_vec)
+    else:
+        scored = cosine_rows_arrow(
+            embeddings.select(F.col(id_col), vec_col),
+            vec_col, const_b=query_vec)
+    return _rank(scored.select(F.col(id_col),
+                               F.round(F.col("cos_raw"), 6).alias("cos_sim")),
+                 k, id_col)
+
+
+def _topk_many(pairs: DataFrame, k: int, id_col: str, vec_col: str,
+               qid_col: str, qvec_col: str) -> DataFrame:
+    """Score (vector, query) pairs with the SQL fold and rank per query.
+
+    NB: scoring this fold through cosine_rows_arrow measured WORSE
+    (0.73 -> 1.13 s at 20k x 3): the pair frame would ship BOTH vectors
+    per (row, query) pair across the Python boundary, where the JVM fold
+    scores the narrow join output in place.  Kept as the interpreted
+    fold on purpose.
+    """
+    return _rank(pairs.select(
+        F.col(qid_col), F.col(id_col),
+        F.round(cosine(F.col(vec_col), F.col(qvec_col)), 6).alias("cos_sim")),
+        k, id_col, qid_col)
+
+
+def topk_cosine_many(embeddings: DataFrame, queries: DataFrame,
+                     k: int = 10, id_col: str = "vec_id",
+                     vec_col: str = "embedding",
+                     qid_col: str = "qid",
+                     qvec_col: str = "qv") -> DataFrame:
+    """Exact batch top-k: top-k per query vector, many queries in ONE
+    scan.
+
+    Plan shape: scan -> broadcast nested-loop join against the (small)
+    query set - an O(n*Q) scoring map, not a shuffle - then one window
+    shuffle of the NARROW (qid, id, cos) projection for the per-query
+    top-k.  The window moves n*Q 24-byte rows, so this path stops
+    scaling with Q; against a materialized index,
+    :func:`topk_cosine_many_ivf` scores each vector only against the
+    queries probing its cell (approximate, recall set by ``n_probe``).
+
+    Scoring is the interpreted SQL fold, so under ANSI a zero-norm
+    vector or query raises DIVIDE_BY_ZERO here, where the single-query
+    operators score it NaN.
+    """
+    return _topk_many(embeddings.crossJoin(F.broadcast(queries)),
+                      k, id_col, vec_col, qid_col, qvec_col)
 
 
 def topk_cosine_many_ivf(spark, path: str, queries: DataFrame,
@@ -268,19 +285,10 @@ def topk_cosine_many_ivf(spark, path: str, queries: DataFrame,
         StructField("cell", IntegerType())]))
     probe_df = cells_df.join(queries.select(qid_col, qvec_col), qid_col)
     all_cells = sorted({cell for _, cell in probe_rows})
-    scored = (spark.read.parquet(path)
-              .filter(F.col("cell").isin(all_cells))
-              .join(F.broadcast(probe_df), "cell")
-              .select(F.col(qid_col),
-                      F.col(id_col),
-                      F.round(cosine(F.col(vec_col), F.col(qvec_col)), 6)
-                      .alias("cos_sim")))
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(qid_col, id_col, "cos_sim",
-                    F.col("rank").cast("long").alias("rank")))
+    pairs = (spark.read.parquet(path)
+             .filter(F.col("cell").isin(all_cells))
+             .join(F.broadcast(probe_df), "cell"))
+    return _topk_many(pairs, k, id_col, vec_col, qid_col, qvec_col)
 
 
 def hyperplanes(dim: int, n_planes: int = 8, seed: int = 42) -> list[list[float]]:
@@ -324,13 +332,8 @@ def topk_cosine_lsh(embeddings: DataFrame, query_vec: list[float],
             q_sig += 2 ** j
     cands = (embeddings
              .withColumn("_sig", lsh_signature(F.col(vec_col), planes))
-             .filter(F.col("_sig") == q_sig)
-             .select(F.col(id_col), vec_col))
-    return (cosine_rows_arrow(cands, vec_col, const_b=query_vec)
-            .select(F.col(id_col),
-                    F.round(F.col("cos_raw"), 6).alias("cos_sim"))
-            .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-            .limit(k))
+             .filter(F.col("_sig") == q_sig))
+    return topk_cosine(cands, query_vec, k, id_col, vec_col)
 
 
 def ivf_centroids(embeddings: DataFrame, n_cells: int = 8,
@@ -412,14 +415,10 @@ def topk_cosine_ivf(embeddings: DataFrame, query_vec: list[float],
     partition column) so a query reads only its probed cells.
     """
     probed = _probe_cells(query_vec, centroids, n_probe)
-    qcol = _query_literal(query_vec)
-    return (embeddings
-            .withColumn("_cell", ivf_cell(F.col(vec_col), centroids))
-            .filter(F.col("_cell").isin(probed))
-            .select(F.col(id_col),
-                    F.round(cosine(F.col(vec_col), qcol), 6).alias("cos_sim"))
-            .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-            .limit(k))
+    cands = (embeddings
+             .withColumn("_cell", ivf_cell(F.col(vec_col), centroids))
+             .filter(F.col("_cell").isin(probed)))
+    return topk_cosine(cands, query_vec, k, id_col, vec_col)
 
 
 def ivf_build_index(embeddings: DataFrame, centroids: list[list[float]],
@@ -444,13 +443,8 @@ def topk_cosine_ivf_indexed(spark, path: str, query_vec: list[float],
     filter, so the scan touches only the probed cells' files.  Results
     are identical to :func:`topk_cosine_ivf` over the same centroids."""
     probed = _probe_cells(query_vec, centroids, n_probe)
-    q = _query_literal(query_vec)
-    return (spark.read.parquet(path)
-            .filter(F.col("cell").isin(probed))
-            .select(F.col(id_col),
-                    F.round(cosine(F.col(vec_col), q), 6).alias("cos_sim"))
-            .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-            .limit(k))
+    cands = spark.read.parquet(path).filter(F.col("cell").isin(probed))
+    return topk_cosine(cands, query_vec, k, id_col, vec_col)
 
 
 def embed_text(text: Column, dim: int = 16, k: int = 2) -> Column:

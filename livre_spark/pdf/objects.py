@@ -268,7 +268,6 @@ def parse_string(buf: bytes, pos: int) -> tuple[PdfString, int]:
 
 # Name terminator set (name.rs:43): NB ``)``, ``%``, ``{``, ``}`` do NOT
 # terminate a name in the reference.
-_NAME_TERM = frozenset(b"\r\n \t/<>[](")
 _NAME_RE = re.compile(rb"/([^\r\n \t/<>\[\]\(]+)")
 _HEX2 = re.compile(rb"[0-9a-fA-F]{1,2}")
 

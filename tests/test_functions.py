@@ -96,13 +96,31 @@ def embeddings(spark):
     return spark.createDataFrame(rows, ["vec_id", "embedding"])
 
 
-def test_topk_cosine(spark, embeddings):
+_ZN_CENTS = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
+
+
+@pytest.mark.parametrize("op", ["topk_cosine", "topk_cosine_ivf",
+                                "topk_cosine_ivf_indexed"])
+def test_topk_cosine(spark, embeddings, tmp_path, op):
     """Ranked by cosine; a zero-norm vector scores 0/0 = NaN (never an
-    error) and, as Spark orders NaN above every number, ranks first."""
+    error) and, as Spark orders NaN above every number, ranks first -
+    the same behaviour for every single-query operator (the IVF ones
+    probe every cell, so they see the whole frame)."""
     zero = spark.createDataFrame([(9, [0.0, 0.0, 0.0, 0.0])],
                                  ["vec_id", "embedding"])
-    got = sim.topk_cosine(embeddings.filter("vec_id != 0").unionByName(zero),
-                          [1.0, 0.0, 0.0, 0.0], k=4).collect()
+    emb = embeddings.filter("vec_id != 0").unionByName(zero)
+    q = [1.0, 0.0, 0.0, 0.0]
+    n = len(_ZN_CENTS)
+    if op == "topk_cosine":
+        df = sim.topk_cosine(emb, q, k=4)
+    elif op == "topk_cosine_ivf":
+        df = sim.topk_cosine_ivf(emb, q, _ZN_CENTS, k=4, n_probe=n)
+    else:
+        path = str(tmp_path / "ivf_index")
+        sim.ivf_build_index(emb, _ZN_CENTS, path)
+        df = sim.topk_cosine_ivf_indexed(spark, path, q, _ZN_CENTS, k=4,
+                                         n_probe=n)
+    got = df.collect()
     assert [r["vec_id"] for r in got] == [9, 1, 4, 2]
     assert math.isnan(got[0]["cos_sim"])
     assert got[1]["cos_sim"] > 0.99
@@ -326,11 +344,9 @@ def test_ivf_indexed_search_partition_pruned(spark, tmp_path):
     assert m and "cell" in m.group(1), m.group(0) if m else plan
 
 
-def test_topk_cosine_many_ivf_and_autoroute(spark, tmp_path):
+def test_topk_cosine_many_ivf(spark, tmp_path):
     """Batch IVF search: (a) with n_probe == n_cells it equals the
-    exact batch path per query; (b) the scan is partition-pruned; (c)
-    topk_cosine_many auto-routes to it when Q > route_threshold and an
-    index is supplied."""
+    exact batch path per query; (b) the scan is partition-pruned."""
     import pyspark.sql.functions as F
 
     rows = [(i, [float((i * 7 + j * 3) % 13) - 6.0 for j in range(8)])
@@ -361,23 +377,6 @@ def test_topk_cosine_many_ivf_and_autoroute(spark, tmp_path):
     import re
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "cell" in m.group(1), m.group(0) if m else plan
-
-    # the auto-route: Q=3 > threshold=2 -> IVF plan (reads the index
-    # path, no crossJoin of the full table)
-    routed = sim.topk_cosine_many(emb, queries, k=4, ivf_path=path,
-                                  centroids=cents, n_probe=4,
-                                  route_threshold=2)
-    assert as_map(routed) == as_map(exact)
-    routed_plan = routed._jdf.queryExecution().executedPlan().toString()
-    assert "FileScan" in routed_plan and "PartitionFilters" in routed_plan
-    # under the threshold the exact path is kept (no index read - the
-    # inputs are in-memory frames, so no FileScan at all)
-    unrouted = sim.topk_cosine_many(emb, queries, k=4, ivf_path=path,
-                                    centroids=cents, n_probe=4,
-                                    route_threshold=8)
-    assert "FileScan" not in unrouted._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert as_map(unrouted) == as_map(exact)
 
 
 def test_connected_components_chain_and_nonconvergence(spark):

@@ -52,9 +52,16 @@ def test_no_python_row_udfs_in_relational_queries(spark):
             assert "MapInPandas" not in plan, name
 
 
-def test_topk_uses_take_ordered(spark):
-    plan = _plan(em.q_topk_orders(spark, SF_DIR))
+@pytest.mark.parametrize("name", ["topk_orders", "sim_topk",
+                                  "sim_topk_lsh", "sim_topk_ivf",
+                                  "sim_topk_ivf_indexed"])
+def test_topk_uses_take_ordered(spark, name):
+    """Every single-query top-k ranks through TakeOrderedAndProject (no
+    shuffle); the cosine family scores candidates in one Arrow map."""
+    plan = _plan(em.queries()[name](spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan
+    if name.startswith("sim_"):
+        assert "MapInArrow" in plan, plan
 
 
 def test_whole_stage_codegen_active(spark):
