@@ -16,7 +16,10 @@ aggregation) live behind pytest pins instead of registry entries.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -603,9 +606,9 @@ sig AS (SELECT doc_id, CAST({bits} AS BIGINT) AS simhash FROM votes)
 
 
 def q_dedup_simhash(spark, sf_dir):
-    """Signatures via the explode + 60-sum hash aggregate
-    (dedup.simhash64_df) - identical integers to the simhash64 fold
-    (commutative votes), ~10x the fold's per-shingle interpreted cost."""
+    """Signatures via dedup.simhash64_df: JVM shingle lists, then one
+    numpy vote kernel per Arrow batch (no explode, no aggregate) -
+    identical integers to the simhash64 fold (commutative votes)."""
     docs = _t(spark, sf_dir, "documents")
     return (dd.simhash64_df(docs, text_col="text", id_col="doc_id", k=1)
             .select(F.col("id").alias("doc_id"),
@@ -837,6 +840,14 @@ LIMIT 10
 """
 
 
+def _ivf_index_dir() -> str:
+    """A fresh directory for one IVF index build, removed at exit: a
+    second build never overwrites an index that a first frame reads."""
+    path = tempfile.mkdtemp(prefix="livre_ivf_")
+    atexit.register(shutil.rmtree, path, True)
+    return path
+
+
 def q_sim_topk_ivf_indexed(spark, sf_dir):
     """The 100 TB ANN path: build the MATERIALIZED IVF index (table
     written once, partitionBy(cell)), then search it - ``cell IN probed``
@@ -844,16 +855,11 @@ def q_sim_topk_ivf_indexed(spark, sf_dir):
     cells' files.  Same seed centroids as sim_topk_ivf, so results (and
     the oracle SQL) are identical; what this row additionally checks is
     the parquet round-trip + partition-pruned read path."""
-    import hashlib
-    import os
-    import tempfile
-
     emb = _t(spark, sf_dir, "embeddings")
     centroids = sim.ivf_centroids(emb, n_cells=4, iters=0)
     qv = [float(x) for x in
           emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"livre_ivf_index_{tag}")
+    path = _ivf_index_dir()
     sim.ivf_build_index(emb.filter(F.col("vec_id") != 0), centroids, path)
     return sim.topk_cosine_ivf_indexed(spark, path, qv, centroids,
                                        k=10, n_probe=2)
@@ -871,17 +877,12 @@ def q_sim_topk_many_ivf(spark, sf_dir):
     map computed driver-side, broadcast-joined ON cell so each vector
     scores only against the queries probing its cell; same seed
     centroids and sequential-fold math as the single-query IVF rows."""
-    import hashlib
-    import os
-    import tempfile
-
     emb = _t(spark, sf_dir, "embeddings")
     centroids = sim.ivf_centroids(emb, n_cells=4, iters=0)
     queries = (emb.filter(F.col("vec_id") <= 2)
                .select(F.col("vec_id").alias("qid"),
                        F.col("embedding").alias("qv")))
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"livre_ivf_many_{tag}")
+    path = _ivf_index_dir()
     sim.ivf_build_index(emb.filter(F.col("vec_id") > 2), centroids, path)
     return sim.topk_cosine_many_ivf(spark, path, queries, centroids,
                                     k=5, n_probe=2)

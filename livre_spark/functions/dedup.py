@@ -1,12 +1,12 @@
 """Deduplication operators for web-scale training data.
 
-Four families, each a composition of built-in DataFrame ops (no Python in
-the hot path):
+Four families, each a composition of built-in DataFrame ops; the one
+Python step is SimHash's vote kernel, a numpy ``mapInArrow`` pass:
 
 - exact:       hash-groupBy on md5(text)
 - MinHash+LSH: word shingles -> K portable min-hashes -> banded buckets
                -> self-join on (band, band-hash) -> candidate pairs
-- SimHash:     64-bit sign-aggregated token hashes, hamming-near pairs
+- SimHash:     60-bit sign-aggregated token hashes, hamming-near pairs
 - n-gram Jaccard: exploded shingle inverted index -> pair intersection
                counts -> |A∩B| / (|A|+|B|-|A∩B|)
 
@@ -22,11 +22,16 @@ first two.
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..operators.skew import ensure_scan_parallelism
-from .textstats import md5_long
 
 
 def shingles(text: Column, k: int = 3) -> Column:
@@ -243,19 +248,14 @@ SIMHASH_BITS = 60  # md5_long is 60 bits
 
 
 def simhash64(text: Column, k: int = 1) -> Column:
-    """60-bit SimHash over word shingles.
+    """60-bit SimHash over word shingles, as a per-row Column fold:
+    bit_j(doc) = sign( sum over shingles of (bit_j(h(s)) ? +1 : -1) ).
 
-    bit_j(doc) = sign( sum over shingles of (bit_j(h(s)) ? +1 : -1) );
-    built entirely from higher-order array functions + bit ops.
-
-    One-pass fold: a single ``aggregate`` carries all 60 vote counters as
-    an array accumulator (one scan of the hashed-shingle array per doc,
-    instead of 60 per-bit scans).  The per-bit vote is folded
-    arithmetically (``acc[j] + 2*bit - 1``) instead of materializing a
-    +-1 vote array per shingle - no intermediate 60-wide allocation and
-    no CASE branch inside the inner loop.  ``shiftright`` goes through
-    ``call_function`` because the SQL builtin accepts a column shift
-    amount while the PySpark wrapper only takes a Python int.
+    The reference form; over a table use :func:`simhash64_df`, which
+    skips this fold's interpreted per-shingle lambda.  One ``aggregate``
+    carries all 60 vote counters (``acc[j] + 2*bit - 1``); ``shiftright``
+    goes through ``call_function`` because the PySpark wrapper only
+    takes a Python int shift.
     """
     sh = shingles(text, k)
     hashed = F.transform(sh, lambda s: _mh(s, 0))
@@ -279,45 +279,45 @@ def simhash64(text: Column, k: int = 1) -> Column:
 
 def simhash64_df(df: DataFrame, text_col: str = "text",
                  id_col: str = "doc_id", k: int = 1) -> DataFrame:
-    """(id, sig): the 60-bit SimHash as ONE explode + hash-aggregate.
+    """(id, sig): the 60-bit SimHash in one ``mapInArrow`` pass.
 
-    :func:`simhash64` is a per-row ``aggregate`` fold whose inner
-    ``zip_with`` step is CodegenFallback - every shingle pays an
-    interpreted 60-lambda evaluation plus a fresh 60-int array (measured
-    30 s for 50k docs at sf1.0).  This table twin explodes the shingle
-    stream and takes 60 codegen ``sum`` aggregates of the per-bit
-    indicator (plus one count), then assembles the signature from the
-    vote sign: ``vote_j = 2*sum(bit_j) - n`` - the same integers the
-    fold accumulates, reordered by commutative addition, so signatures
-    are identical.  Map-side partial aggregation keeps the one shuffle
-    at (id, 61 longs) per doc (guide sections 2.3/4.1).
+    The JVM builds each text's shingle list (:func:`shingles`); a numpy
+    kernel hashes each distinct shingle of a batch once, as ``_mh(s, 0)``
+    over its UTF-8 bytes, and sums the bit indicators per document.
+    ``vote_j = 2*sum(bit_j) - n`` is :func:`simhash64`'s +-1 fold
+    reordered, so signatures are identical: an empty shingle list gives
+    sig 0 and a null text a null sig.  No explode and no aggregate, and
+    no state across batches.
 
-    ``explode_outer`` keeps empty-shingle docs (k>=2 short texts) as one
-    null shingle: the null-skipping aggregates then yield zero votes ->
-    sig 0, exactly the fold's empty-array result; null text keeps the
-    fold's null sig via the carried ``_tn`` flag.
+    Precondition: ``id_col`` is a key.  The kernel emits one row per
+    input row, so duplicate ids are not merged.
     """
+    def votes(batches):
+        for batch in batches:
+            lists = batch.column(1)
+            enc = pc.list_flatten(lists).dictionary_encode()
+            h = np.array([int.from_bytes(hashlib.md5(b"0|" + w).digest()[:8],
+                                         "big") >> 4 for w in
+                          enc.dictionary.cast(pa.large_binary()).to_pylist()],
+                         dtype="<u8")
+            bits = np.unpackbits(h.view(np.uint8).reshape(-1, 8), axis=1,
+                                 bitorder="little")[enc.indices.to_numpy()]
+            n = pc.fill_null(pc.list_value_length(lists), 0).to_numpy()
+            parents = np.repeat(np.arange(len(lists)), n)
+            ones = np.stack([np.bincount(parents, weights=bits[:, j],
+                                         minlength=len(lists))
+                             for j in range(SIMHASH_BITS)], axis=1)
+            sig = (2 * ones - n[:, None] > 0) @ (1 << np.arange(SIMHASH_BITS))
+            null = lists.is_null().to_numpy(zero_copy_only=False)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), pa.array(sig, mask=null)], names=["id", "sig"])
+
     base = ensure_scan_parallelism(
         df.select(F.col(id_col).alias("id"),
-                  F.col(text_col).isNull().alias("_tn"),
                   F.col(text_col).alias("_t")), "id")
-    exploded = base.select(
-        "id", "_tn", F.explode_outer(shingles(F.col("_t"), k)).alias("_s"))
-    hashed = exploded.select(
-        "id", "_tn", _mh(F.col("_s"), 0).alias("_h"))
-    aggs = [F.count(F.col("_h")).alias("_n")] + [
-        F.sum(F.shiftright(F.col("_h"), j).bitwiseAND(F.lit(1))
-              .cast("int")).alias(f"_sb{j}")
-        for j in range(SIMHASH_BITS)]
-    votes = hashed.groupBy("id", "_tn").agg(*aggs)
-    sig = F.lit(0).cast("long")
-    for j in range(SIMHASH_BITS):
-        vote = 2 * F.coalesce(F.col(f"_sb{j}"), F.lit(0)) - F.col("_n")
-        sig = sig + F.when(vote > 0, F.lit(1 << j).cast("long")) \
-                     .otherwise(F.lit(0).cast("long"))
-    return votes.select(
-        "id", F.when(F.col("_tn"), F.lit(None).cast("long"))
-        .otherwise(sig).alias("sig"))
+    lists = base.select("id", shingles(F.col("_t"), k).alias("_s"))
+    return lists.mapInArrow(votes, StructType(
+        [lists.schema["id"], StructField("sig", LongType())]))
 
 
 def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
@@ -330,7 +330,7 @@ def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
     any pair within ``max_hamming`` bits (with ``bands > max_hamming``)
     agrees exactly on at least one chunk, so the chunk-equality bucket
     join has 100% recall.  Candidates are then popcount-filtered
-    (``bit_count(sig_a XOR sig_b)``), all JVM-side.
+    (``bit_count(sig_a XOR sig_b)``) in the JVM.
 
     Scale shape: one explode (x bands) + one shuffle on (band, chunk);
     never an all-pairs join.
@@ -348,14 +348,10 @@ def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
     width = SIMHASH_BITS // bands
     mask = (1 << width) - 1
     # sigs is consumed three times (hot-bucket counts + both self-join
-    # sides).  A repartition reuse barrier does NOT work here - hash(id)
-    # is elided (the aggregate output is already id-partitioned) and
-    # round-robin measured no better - so the signature aggregate is
-    # lazily localCheckpoint-ed: the first consumer materializes
-    # (id, sig) into executor block storage and the other two read
-    # blocks instead of re-running the explode + md5 + 61-aggregate
-    # pass (measured 4.8 -> 4.3s at sf1.0 and 5.2 -> 3.4s at sf0.1,
-    # where Janino recompiling the wide aggregate per copy dominated).
+    # sides), so the signature pass is lazily localCheckpoint-ed: the
+    # first consumer materializes (id, sig) into executor block storage
+    # and the other two read blocks instead of re-running the shingle +
+    # vote kernel (a repartition reuse barrier measured no better).
     # Single-box durability trade as in connected_components' default:
     # executor loss after materialization fails the job - acceptable
     # for an intra-query intermediate any retry recomputes from source.

@@ -22,6 +22,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (DoubleType, IntegerType, LongType, StructField,
+                               StructType)
 from pyspark.sql.window import Window
 
 from ..operators.skew import ensure_scan_parallelism
@@ -42,7 +44,14 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    return _nan_div(dot(a, b), norm(a) * norm(b))
+
+
+def _nan_div(num: Column, den: Column) -> Column:
+    """``num / den``, but NaN (the Arrow scorers' 0/0) where ``den`` is 0,
+    instead of ANSI's DIVIDE_BY_ZERO; a null ``num`` stays null (a length
+    mismatch), and other rows divide as ``/`` does."""
+    return F.when(den == 0, num * F.lit(float("nan"))).otherwise(num / den)
 
 
 # NB on the folds above: zip_with/aggregate are CodegenFallback
@@ -60,15 +69,14 @@ def _query_literal(query_vec: list[float]) -> Column:
 
 
 def _seq_fold(a, b):
-    """Row-wise ``(dot, |a|^2, |b|^2)`` of two ``(n, d)`` float64
-    matrices, accumulated column by column: every row sees one IEEE
-    multiply and one IEEE add per element in array order - the same
-    operation sequence as the SQL ``aggregate`` fold and DuckDB's
-    ``list_dot_product``, so the results are bit-identical to both."""
-    n = a.shape[0]
-    dot, na, nb = np.zeros(n), np.zeros(n), np.zeros(n)
-    for k in range(a.shape[1]):
-        x, y = a[:, k], b[:, k]
+    """``(dot, |a|^2, |b|^2)`` over the last axis of two broadcastable
+    float64 arrays (``(n, d)`` row pairs, or ``(n, 1, d)`` rows against
+    ``(1, p, d)`` planes): one IEEE multiply and one IEEE add per element
+    in array order, the operation sequence of the SQL ``aggregate`` fold
+    and DuckDB's ``list_dot_product``, so results are bit-identical."""
+    dot = na = nb = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for k in range(a.shape[-1]):
+        x, y = a[..., k], b[..., k]
         dot = dot + x * y
         na = na + x * x
         nb = nb + y * y
@@ -118,14 +126,11 @@ def cosine_rows_arrow(df: DataFrame, a_col: str, b_col: str | None = None,
     different lengths are scored in one vectorized call per distinct
     length.  Rounding is deliberately left to the JVM: callers apply
     ``F.round(out_col, 6)`` so ordering/rounding semantics are
-    untouched.  (On zero-norm rows the ANSI fold raises DIVIDE_BY_ZERO
-    while this kernel - like the near-dup scorer - yields NaN.)
+    untouched.  Zero-norm rows yield NaN, as the fold does.
 
     All columns of ``df`` pass through; project before calling so the
     vectors cross the Python boundary exactly once.
     """
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     out_schema = StructType(df.schema.fields
                             + [StructField(out_col, DoubleType())])
     ia = df.columns.index(a_col)
@@ -243,9 +248,8 @@ def topk_cosine_many(embeddings: DataFrame, queries: DataFrame,
     :func:`topk_cosine_many_ivf` scores each vector only against the
     queries probing its cell (approximate, recall set by ``n_probe``).
 
-    Scoring is the interpreted SQL fold, so under ANSI a zero-norm
-    vector or query raises DIVIDE_BY_ZERO here, where the single-query
-    operators score it NaN.
+    Scoring is the interpreted SQL fold; a zero-norm vector or query
+    scores NaN, as in the single-query operators.
     """
     return _topk_many(embeddings.crossJoin(F.broadcast(queries)),
                       k, id_col, vec_col, qid_col, qvec_col)
@@ -270,8 +274,6 @@ def topk_cosine_many_ivf(spark, path: str, queries: DataFrame,
     per query.  With ``n_probe == len(centroids)`` results equal the
     exact path.  Output schema matches :func:`topk_cosine_many`.
     """
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
     qrows = queries.select(qid_col, qvec_col).collect()
     probe_rows = []
     for row in qrows:
@@ -297,21 +299,30 @@ def hyperplanes(dim: int, n_planes: int = 8, seed: int = 42) -> list[list[float]
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-of-dot-product bit signature packed into a long.
+def _sign_keys_arrow(df: DataFrame, vec_col: str,
+                     plane_groups: list[list[list[float]]],
+                     names: list[str]) -> DataFrame:
+    """Append one long sign-LSH key per plane group in one Arrow pass:
+    bit ``j`` of ``names[g]`` is set where ``vec_col`` . ``plane_groups
+    [g][j] >= 0``.  Bit-identical to ``F.when(dot(vec, plane) >= 0,
+    2**j)``: the same :func:`_seq_fold`; a NaN dot sets the bit (Spark
+    orders NaN above every number); rows :func:`_as_matrix` marks invalid
+    (the fold's null dot) get key 0.  No state across batches."""
+    planes = np.asarray([p for g in plane_groups for p in g], dtype=float)
+    bounds = np.cumsum([0] + [len(g) for g in plane_groups])
+    iv, out_names = df.columns.index(vec_col), df.columns + names
 
-    Kept as the fold-based dot: a single signature expression with
-    ``len(planes)`` unrolled dim-wide dots would exceed janino's 64 KB
-    method limit and degrade its whole stage to interpreted mode
-    (callers that need codegen materialize the per-plane dots as
-    separate columns instead - see ``cosine_near_dup_pairs_lsh``).
-    """
-    acc = F.lit(0).cast("long")
-    for j, plane in enumerate(planes):
-        bit = F.when(dot(vec, _query_literal(plane)) >= 0,
-                     F.lit(2 ** j).cast("long")).otherwise(F.lit(0).cast("long"))
-        acc = acc + bit
-    return acc
+    def fn(batches):
+        for batch in batches:
+            m, ok = _as_matrix(batch.column(iv), planes.shape[1])
+            dots = _seq_fold(m[:, None, :], planes[None, :, :])[0]
+            bits = ((dots >= 0) | np.isnan(dots)) & ok[:, None]
+            yield pa.RecordBatch.from_arrays(list(batch.columns) + [
+                pa.array(bits[:, lo:hi] @ (1 << np.arange(hi - lo)))
+                for lo, hi in zip(bounds[:-1], bounds[1:])], names=out_names)
+
+    return df.mapInArrow(fn, StructType(
+        df.schema.fields + [StructField(n, LongType()) for n in names]))
 
 
 def topk_cosine_lsh(embeddings: DataFrame, query_vec: list[float],
@@ -320,18 +331,15 @@ def topk_cosine_lsh(embeddings: DataFrame, query_vec: list[float],
     """ANN: only vectors in the query's LSH bucket are scored.
 
     Recall is probabilistic (more planes = smaller buckets); candidates
-    are pruned at the scan by a codegen-able signature equality, so at
-    scale this reads everything once but *scores* only the bucket.
+    are pruned by a signature equality on the Arrow sign-key pass, so
+    at scale this reads everything once but *scores* only the bucket.
     A production variant bucketizes the table once and bucket-joins.
     """
     planes = hyperplanes(len(query_vec), n_planes, seed)
-    q_sig = 0
-    for j, plane in enumerate(planes):
-        d = sum(a * b for a, b in zip(query_vec, plane))
-        if d >= 0:
-            q_sig += 2 ** j
-    cands = (embeddings
-             .withColumn("_sig", lsh_signature(F.col(vec_col), planes))
+    q_sig = sum(2 ** j for j, plane in enumerate(planes)
+                if sum(a * b for a, b in zip(query_vec, plane)) >= 0)
+    cands = (_sign_keys_arrow(embeddings.select(id_col, vec_col), vec_col,
+                              [planes], ["_sig"])
              .filter(F.col("_sig") == q_sig))
     return topk_cosine(cands, query_vec, k, id_col, vec_col)
 
@@ -346,7 +354,6 @@ def ivf_centroids(embeddings: DataFrame, n_cells: int = 8,
     driver only holds the centroids).  At 100 TB you run this on a
     sampled slice; the index build is a one-time batch job.
     """
-    import numpy as np
     from pyspark.ml.functions import array_to_vector
     from pyspark.ml.stat import Summarizer
 
@@ -578,9 +585,9 @@ def cosine_near_dup_pairs_lsh(embeddings: DataFrame, dim: int,
     the bucket counts, so the cap is one :func:`dedup._drop_hot` step -
     recall statement and broadcast bound there.
 
-    Plan shape (guide sections 2.3/2.4/4.2): one explode (x bands) of
-    (id, vec, band, key), then each (band, key) bucket is scored by
-    a VECTORIZED native kernel (grouped ``applyInArrow`` + numpy GEMM)
+    Plan shape (guide sections 2.3/2.4/4.2): one Arrow sign-key pass,
+    one explode (x bands) of (id, vec, band, key), then each bucket is
+    scored by a VECTORIZED kernel (grouped ``applyInArrow`` + numpy GEMM)
     instead of a relational self-join.  A self-join shape shuffles the
     FULL O(sum bucket^2) candidate set through a ``distinct`` and pays
     an interpreted ~20 us array fold per pair - measured 316 s at sf1.0
@@ -608,21 +615,19 @@ def cosine_near_dup_pairs_lsh(embeddings: DataFrame, dim: int,
     from .dedup import _band_explode, _drop_hot
 
     planes = hyperplanes(dim, bands * planes_per_band, seed)
-    # parallelize BEFORE the signature folds: the interpreted per-plane
-    # fold costs ~80 us/row and is evaluated by the work frame AND the
-    # hot-bucket counts - on a starved single-task scan that serialized
-    # the whole front of the query (guide 2.5)
+    # parallelize BEFORE the signature pass: on a starved single-task
+    # scan the whole front of the query runs on one core (guide 2.5)
     src = ensure_scan_parallelism(
         embeddings.select(F.col(id_col).alias("id"),
                           F.col(vec_col).alias("v")))
-    buckets = _band_explode(src, [
-        lsh_signature(F.col("v"),
-                      planes[b * planes_per_band:(b + 1) * planes_per_band])
-        for b in range(bands)], carry=("v",))
+    keys = [f"_k{b}" for b in range(bands)]
+    buckets = _band_explode(_sign_keys_arrow(src, "v", [
+        planes[b * planes_per_band:(b + 1) * planes_per_band]
+        for b in range(bands)], keys), [F.col(c) for c in keys], carry=("v",))
     if max_bucket_factor is not None:
         # the cap needs a counting pass over buckets before the scoring
         # pass; a lazy localCheckpoint materializes the (id, vec, band,
-        # key) frame once so the signature folds are not recomputed
+        # key) frame once so the signature pass is not recomputed
         # by the second consumer (same durability trade as the dedup
         # pairs functions)
         buckets = buckets.localCheckpoint(eager=False)
@@ -743,7 +748,7 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
                           F.col(vec_col).alias("vb"),
                           norm(F.col(vec_col)).alias("nb"))
     return (a.join(b, F.col("id_a") < F.col("id_b"))
-            .withColumn("cos_sim", F.round(
-                dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6))
+            .withColumn("cos_sim", F.round(_nan_div(
+                dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")), 6))
             .filter(F.col("cos_sim") >= threshold)
             .select("id_a", "id_b", "cos_sim"))

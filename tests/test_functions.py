@@ -487,18 +487,66 @@ def test_minhash_lsh_hot_bucket_cap_both_engines(spark):
 
 
 def test_simhash64_df_matches_fold_on_edge_docs(spark):
-    """The explode + 60-sum aggregate signature equals the per-row fold
-    on every edge shape: normal text, empty string, whitespace-only,
-    single word, and null text (null sig)."""
+    """The Arrow vote kernel's signature equals the per-row fold at k=1
+    and k=2 on every edge shape: normal text, empty string,
+    whitespace-only, single word (a short text at k=2), null text (null
+    sig), repeated and duplicate words, and non-ASCII text (md5 over the
+    UTF-8 bytes).  Batches of two rows put batch boundaries inside the
+    frame."""
     rows = [(0, "some plain words here"), (1, ""), (2, "   "),
             (3, "word"), (4, None),
-            (5, "repeated repeated repeated unique")]
+            (5, "repeated repeated repeated unique"),
+            (6, "É ünïcödé ß ẞ İ"), (7, "dup dup"), (8, "a b a b a")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    fold = {r["doc_id"]: r["s"] for r in df.select(
-        "doc_id", dd.simhash64(F.col("text"), k=1).alias("s")).collect()}
-    table = {r["id"]: r["sig"] for r in
-             dd.simhash64_df(df, k=1).collect()}
-    assert table == fold
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        for k in (1, 2):
+            fold = {r["doc_id"]: r["s"] for r in df.select(
+                "doc_id", dd.simhash64(F.col("text"), k=k).alias("s"))
+                .collect()}
+            table = {r["id"]: r["sig"] for r in
+                     dd.simhash64_df(df, k=k).collect()}
+            assert table == fold, k
+            assert fold[4] is None and fold[6] != 0
+        assert fold[3] == 0                     # one word: no 2-shingle
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_sign_keys_arrow_matches_fold(spark):
+    """The Arrow sign-LSH keys equal the inline fold
+    ``when(dot(v, plane) >= 0, 2**j)`` summed per plane group, on clean
+    rows and on a zero vector (every dot 0: all bits set), a NaN element
+    (NaN dot: bit set, as Spark orders NaN above every number), and the
+    fold's null-dot rows - null vector, wrong length, null element -
+    which get key 0."""
+    rnd = random.Random(7)
+    rows = [(i, [rnd.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
+    rows += [(100, [0.0] * 8), (101, [1.0] * 7 + [float("nan")]),
+             (102, None), (103, [1.0] * 7), (104, [1.0] * 7 + [None])]
+    df = spark.createDataFrame(rows, "id long, v array<float>")
+    planes = sim.hyperplanes(8, 6, seed=3)
+    groups = [planes[0:2], planes[2:5], planes[5:6]]
+
+    def fold_key(group):
+        key = F.lit(0).cast("long")
+        for j, plane in enumerate(group):
+            key = key + F.when(
+                sim.dot(F.col("v"), F.array(*[F.lit(x) for x in plane])) >= 0,
+                F.lit(2 ** j).cast("long")).otherwise(F.lit(0).cast("long"))
+        return key
+
+    names = [f"k{g}" for g in range(len(groups))]
+    want = {r["id"]: tuple(r[n] for n in names) for r in df.select(
+        "id", *[fold_key(g).alias(n) for g, n in zip(groups, names)])
+        .collect()}
+    got = {r["id"]: tuple(r[n] for n in names) for r in
+           sim._sign_keys_arrow(df, "v", groups, names).collect()}
+    assert got == want
+    assert got[100] == (3, 7, 1) and got[101] == (3, 7, 1)
+    assert got[102] == got[103] == got[104] == (0, 0, 0)
 
 
 def test_minhash_signature_df_matches_column_fold(spark):
@@ -532,6 +580,38 @@ def test_near_dup_zero_norm_pairs_keep_nan_semantics(spark):
     assert (0, 1) in got and math.isnan(got[(0, 1)])
     # the well-formed near-identical pair is still found and finite
     assert (2, 3) in got and got[(2, 3)] >= 0.95
+
+
+def test_zero_norm_scores_nan_in_fold_operators(spark, tmp_path):
+    """The SQL-fold operators (many-query top-k with and without IVF,
+    all-pairs near-dup) score a zero-norm row NaN instead of failing the
+    job with DIVIDE_BY_ZERO, matching topk_cosine and
+    cosine_near_dup_pairs_lsh; nonzero rows are unchanged."""
+    rows = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.9, 0.1, 0.0, 0.0]),
+            (2, [0.0, 1.0, 0.0, 0.0]), (9, [0.0, 0.0, 0.0, 0.0])]
+    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    q = [1.0, 0.0, 0.0, 0.0]
+    single = [(r["vec_id"], _bits(r["cos_sim"])) for r in
+              sim.topk_cosine(emb, q, k=4).collect()]
+    assert single[0] == (9, b"NaN")
+    queries = spark.createDataFrame([(0, q)], ["qid", "qv"])
+    path = str(tmp_path / "ivf_index")
+    sim.ivf_build_index(emb, _ZN_CENTS, path)
+    for df in (sim.topk_cosine_many(emb, queries, k=4),
+               sim.topk_cosine_many_ivf(spark, path, queries, _ZN_CENTS,
+                                        k=4, n_probe=len(_ZN_CENTS))):
+        assert [(r["vec_id"], _bits(r["cos_sim"]))
+                for r in df.collect()] == single
+    exact = {(r["id_a"], r["id_b"]): _bits(r["cos_sim"]) for r in
+             sim.cosine_near_dup_pairs(emb, threshold=0.95).collect()}
+    assert exact == {(0, 1): exact[(0, 1)], (0, 9): b"NaN",
+                     (1, 9): b"NaN", (2, 9): b"NaN"}
+    lsh = {(r["id_a"], r["id_b"]): _bits(r["cos_sim"]) for r in
+           sim.cosine_near_dup_pairs_lsh(emb, dim=4, threshold=0.95,
+                                         bands=4,
+                                         planes_per_band=2).collect()}
+    assert lsh.items() <= exact.items()
+    assert any(9 in pair for pair in lsh)
 
 
 def test_near_dup_malformed_vectors_excluded_not_fatal(spark):
@@ -568,9 +648,8 @@ def test_cosine_rows_arrow_matches_fold(spark):
     interpreted zip_with/aggregate fold, on an all-clean frame (no
     nulls, uniform lengths) and on one that also holds the fold's null
     cases (null array, length mismatch, null element), which must come
-    back as genuine nulls.  Zero-norm rows - where the ANSI fold would
-    raise DIVIDE_BY_ZERO - must yield NaN (the near-dup scorer's
-    established semantics)."""
+    back as genuine nulls.  Zero-norm rows yield NaN on both sides,
+    never an error."""
     rnd = random.Random(31)
     rows = [(i,
              [rnd.uniform(-2, 2) for _ in range(16)],
@@ -584,6 +663,8 @@ def test_cosine_rows_arrow_matches_fold(spark):
         (104, [1.0] * 15 + [None], [1.0] * 16),  # null element -> null
         (105, [float("nan")] * 16, [1.0] * 16),  # NaN propagates
         (106, [0.5] * 8, [2.0] * 8),            # second length, valid
+        (107, [0.0] * 16, [1.0] * 16),          # zero norm -> NaN
+        (108, [], []),                          # empty -> 0/0 = NaN
     ]
     qv = rows[0][2]
     for data in (rows, rows + edge):
@@ -607,11 +688,4 @@ def test_cosine_rows_arrow_matches_fold(spark):
             assert set(want) == set(got)
             for k in want:
                 assert _bits(want[k]) == _bits(got[k]), (k, want[k], got[k])
-
-    # zero-norm: scorer yields NaN, never raises
-    zdf = spark.createDataFrame(
-        [(0, [0.0] * 16, [1.0] * 16), (1, [], [])],
-        "id long, a array<float>, b array<float>")
-    z = {r["id"]: r["cos_raw"] for r in
-         sim.cosine_rows_arrow(zdf, "a", "b").collect()}
-    assert all(v is not None and math.isnan(v) for v in z.values())
+    assert math.isnan(got_cols[107]) and math.isnan(got_cols[108])

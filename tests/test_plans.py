@@ -37,10 +37,11 @@ def test_column_pruning_reaches_scan(spark):
 
 
 def test_no_python_row_udfs_in_relational_queries(spark):
-    """B19 discipline: relational/text/dedup/similarity queries are pure
-    JVM - no BatchEvalPython (row UDF) anywhere; mapInPandas (ArrowEval /
-    MapInPandas) only in the extraction + multimodal + crypt-kernel
-    queries (doc_info_crypt builds encrypted PDFs per row)."""
+    """B19 discipline: no BatchEvalPython (row UDF) anywhere; Python
+    runs only in vectorized Arrow stages.  mapInPandas only in the
+    extraction + multimodal + crypt-kernel queries (doc_info_crypt builds
+    encrypted PDFs per row); the similarity and dedup queries use numpy
+    kernels under mapInArrow / grouped applyInArrow instead."""
     for name, fn in em.queries().items():
         plan = _plan(fn(spark, SF_DIR))
         assert "BatchEvalPython" not in plan, name
@@ -88,3 +89,27 @@ def test_hot_bucket_cap_is_broadcast_anti_join(spark, name):
         "BroadcastHashJoin" in plan and "LeftAnti" in plan), plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.parametrize("name", ["dedup_simhash", "dedup_simhash_pairs",
+                                  "sim_near_dup", "sim_topk_lsh"])
+def test_signature_stages_are_arrow_maps(spark, monkeypatch, name):
+    """SimHash signatures and sign-LSH keys are built in one mapInArrow
+    pass each; the SimHash stage has no shingle explode and no
+    per-document aggregate left.  The pair queries read their signature
+    frame through a lazy localCheckpoint, whose executed plan is a bare
+    RDD scan, so the plans of checkpointed frames are audited too."""
+    frame_cls = type(spark.range(1))
+    plans = []
+    checkpoint = frame_cls.localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        plans.append(_plan(df))
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    plans.append(_plan(em.queries()[name](spark, SF_DIR)))
+    plan = "\n".join(plans)
+    assert "MapInArrow" in plan, plan
+    if name == "dedup_simhash":
+        assert "HashAggregate" not in plan and "Generate" not in plan, plan

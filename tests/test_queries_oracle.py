@@ -85,3 +85,17 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert set(df.columns) == {"url", "text", "n_pages"}
+
+
+@pytest.mark.parametrize("name", ["sim_topk_ivf_indexed",
+                                  "sim_topk_many_ivf"])
+def test_ivf_index_builds_do_not_share_a_directory(spark, duck, name):
+    """Each build writes its index to a directory of its own, so a second
+    build of the same query leaves the first frame's index intact."""
+    frames = [QUERIES[name](spark, SF_DIR) for _ in range(2)]
+    roots = [{f.split("/cell=")[0] for f in df.inputFiles() if "/cell=" in f}
+             for df in frames]
+    assert len(roots[0]) == len(roots[1]) == 1 and roots[0] != roots[1]
+    want = _duck_rows(duck, ORACLES[name])
+    for df in frames:
+        assert _spark_rows(df) == want
