@@ -12,14 +12,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
-    """Roll up the extraction output per task partition."""
+def partition_metrics(extracted: DataFrame) -> DataFrame:
+    """Roll up the extraction output per (run, task partition)."""
     return (extracted
-            .groupBy("partition_id")
+            .groupBy("run_id", "partition_id")
             .agg(F.count("*").alias("n_docs"),
                  F.count(F.when(F.col("error").isNull(), 1)).alias("n_ok"),
                  F.count(F.when(F.col("error").isNotNull(), 1)).alias("n_err"),
                  F.sum("bytes_in").alias("bytes_in"),
                  F.sum("parse_ms").alias("parse_ms"),
                  F.sum("n_pages").alias("n_pages"))
-            .withColumn("run_id", F.lit(run_id)))
+            .select("partition_id", "n_docs", "n_ok", "n_err", "bytes_in",
+                    "parse_ms", "n_pages", "run_id"))

@@ -2,8 +2,10 @@
 
 read (B1) -> latest-per-url dedup (B12) -> magic-byte filter (B4) ->
 checkpoint anti-join (B13/B18) -> size-bucket + salt repartition (B5/B6)
--> mapInPandas extraction (B7) -> ONE write of text + nested spans (B2)
--> spans/metrics/manifest derived from the written table (B9/B10/B18).
+-> mapInArrow extraction (B7) -> ONE write of text + nested spans (B2)
+-> spans/metrics/manifest derived from this run's rows (B9/B10/B18).
+Everything after the snapshot dedup is one body, ``_extract_and_commit``,
+which the streaming ``foreachBatch`` (B20) runs per micro-batch too.
 
 Catalyst plans everything outside the UDF.  Stage boundaries: one shuffle
 for the dedup window, one for the skew repartition, one for the metrics
@@ -12,11 +14,11 @@ aggregate - the minimum for these semantics.
 Single-action design: the extraction UDF runs exactly once, feeding one
 parquet write of ``documents_text`` (text + nested ``spans`` + ``run_id``).
 Every secondary sink (exploded spans, per-partition metrics, the resume
-manifest) is derived by reading that table back with column-pruned scans -
-no ``persist()`` of full text+spans through the block store, no repeated
-extraction.  At 100 TB the read-backs touch only the small columns
-(parquet prunes ``text`` away), so the fan-out costs a metadata-sized
-fraction of the extraction itself.
+manifest) is derived by reading this run's rows back - the sink partitions
+``documents_text`` by ``run_id``, so that opens only this run's files, and
+parquet prunes ``text`` away - with no ``persist()`` of full text+spans
+through the block store and no repeated extraction: the fan-out costs a
+metadata-sized fraction of the extraction itself.
 
 Crash-consistency: the manifest append is the commit point and it runs
 last, so a crash between the text write and the manifest leaves a *torn
@@ -34,12 +36,14 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.htmltext import looks_like_html
 from ..operators.checkpoint import append_manifest, filter_done, read_done_urls
 from ..operators.extraction import (
-    explode_spans, extract_documents, pdf_magic_filter,
+    _pdf_magic, explode_spans, extract_documents, extract_html_documents,
+    pdf_magic_filter,
 )
 from ..operators.metrics import partition_metrics
 from ..operators.skew import latest_per_url, size_bucketed_repartition
@@ -140,19 +144,48 @@ def heal_torn(spark: SparkSession, output_dir: str,
         sink.append(explode_spans(missing_spans), SPANS_TABLE)
 
     metrics_tbl = sink.read_or_none(spark, METRICS_TABLE)
-    torn_runs = [r["run_id"]
-                 for r in torn.select("run_id").distinct().collect()]
-    if metrics_tbl is not None:
-        have = {r["run_id"] for r in
-                metrics_tbl.select("run_id").distinct().collect()}
-        torn_runs = [r for r in torn_runs if r not in have]
-    for rid in torn_runs:
-        sink.append(
-            partition_metrics(torn.filter(F.col("run_id") == rid), rid),
-            METRICS_TABLE)
+    missing_runs = torn if metrics_tbl is None else torn.join(
+        metrics_tbl.select("run_id").distinct(), "run_id", "left_anti")
+    sink.append(partition_metrics(missing_runs), METRICS_TABLE)
 
     append_manifest(torn, checkpoint_dir)
     return n_torn
+
+
+def _extract_and_commit(pages: DataFrame, run_id: str, sink: TableSink,
+                        checkpoint_dir: str | None, write_spans: bool = True,
+                        html_mode: str | None = None, **kernel) -> int:
+    """``run_pipeline``'s body after healing and snapshot dedup, also run
+    per streaming micro-batch; ``kernel`` goes to ``extract_documents``.
+    Returns the number of docs this run wrote."""
+    pages = filter_done(pages, checkpoint_dir)
+    # a stored byte-length column turns the two size-branch predicates
+    # into stats-pruned pushed filters (no double scan of the binary)
+    size_col = "n_bytes" if "n_bytes" in pages.columns else None
+    extracted = extract_documents(
+        size_bucketed_repartition(pdf_magic_filter(pages), size_col=size_col),
+        **kernel)
+    if html_mode is not None:
+        # the HTML branch is pure codegen (no UDF, no skew shuffle - the
+        # regex pipeline cost is linear in bytes, scan splits balance it)
+        extracted = extracted.unionByName(extract_html_documents(
+            pages.filter(~_pdf_magic("html") & looks_like_html("html")),
+            mode=html_mode))
+
+    # the ONLY action that runs the UDF: text + nested spans in one write
+    sink.append(extracted.withColumn("run_id", F.lit(run_id)), TEXT_TABLE)
+
+    # secondary sinks derive from this run's rows; parquet prunes the
+    # text column away, so these scans read only the small columns
+    written = sink.read_run(pages.sparkSession, TEXT_TABLE, run_id)
+    if written is None:  # nothing extracted: no rows to derive or commit
+        return 0
+    if write_spans:
+        sink.append(explode_spans(written), SPANS_TABLE)
+    sink.append(partition_metrics(written), METRICS_TABLE)
+    n_docs = written.count()
+    append_manifest(written, checkpoint_dir)
+    return n_docs
 
 
 def run_pipeline(spark: SparkSession, source: str, output_dir: str,
@@ -178,7 +211,6 @@ def run_pipeline(spark: SparkSession, source: str, output_dir: str,
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     sink = sink or ParquetSink(output_dir)
-    text_path = sink.location(TEXT_TABLE)
 
     healed = heal_torn(spark, output_dir, checkpoint_dir,
                        write_spans=write_spans, sink=sink)
@@ -186,46 +218,12 @@ def run_pipeline(spark: SparkSession, source: str, output_dir: str,
     pages = read_pages(spark, source)
     if dedup_snapshots and "warc_ts" in pages.columns:
         pages = latest_per_url(pages)
-    pages = filter_done(pages, checkpoint_dir)
-
-    # a stored byte-length column turns the two size-branch predicates
-    # into stats-pruned pushed filters (no double scan of the binary)
-    size_col = "n_bytes" if "n_bytes" in pages.columns else None
-    pdf_pages = size_bucketed_repartition(pdf_magic_filter(pages),
-                                          size_col=size_col)
-    extracted = extract_documents(pdf_pages, cmap=cmap,
-                                  strip_inline=strip_inline,
-                                  with_info=with_info)
-    if html_mode is not None:
-        from ..functions.htmltext import looks_like_html
-        from ..operators.extraction import _pdf_magic, extract_html_documents
-
-        html_pages = pages.filter(~_pdf_magic("html")
-                                  & looks_like_html("html"))
-        # the HTML branch is pure codegen (no UDF, no skew shuffle - the
-        # regex pipeline cost is linear in bytes, scan splits balance it)
-        extracted = extracted.unionByName(
-            extract_html_documents(html_pages, mode=html_mode))
-
-    # the ONLY action that runs the UDF: text + nested spans in one write
-    sink.append(extracted.withColumn("run_id", F.lit(run_id)), TEXT_TABLE)
-
-    # secondary sinks derive from the written table; parquet prunes the
-    # text column away, so these scans read only the small columns
-    written = (sink.read_or_none(spark, TEXT_TABLE)
-               .filter(F.col("run_id") == run_id))
-
-    spans_path = None
-    if write_spans:
-        spans_path = sink.location(SPANS_TABLE)
-        sink.append(explode_spans(written), SPANS_TABLE)
-
-    metrics_path = sink.location(METRICS_TABLE)
-    sink.append(partition_metrics(written, run_id), METRICS_TABLE)
-
-    n_docs = written.count()
-    append_manifest(written, checkpoint_dir)
+    n_docs = _extract_and_commit(
+        pages, run_id, sink, checkpoint_dir, write_spans=write_spans,
+        html_mode=html_mode, cmap=cmap, strip_inline=strip_inline,
+        with_info=with_info)
 
     return {"run_id": run_id, "n_docs": n_docs, "n_healed": healed,
-            "text_path": text_path, "spans_path": spans_path,
-            "metrics_path": metrics_path}
+            "text_path": sink.location(TEXT_TABLE),
+            "spans_path": sink.location(SPANS_TABLE) if write_spans else None,
+            "metrics_path": sink.location(METRICS_TABLE)}

@@ -1,15 +1,17 @@
 """Table sinks: the pipeline's write/read-back seam (B2).
 
-``run_pipeline`` writes four tables (documents_text, documents_spans,
-partition_metrics, done_urls).  SURVEY B2 names Iceberg
-(``writeTo(...).append()``) as the production sink; this sandbox has no
-Iceberg runtime jars, so the shipped implementation is parquet - but the
-pipeline only talks to the ``TableSink`` protocol below, so swapping
-sinks is a constructor argument, not a rewrite.
+The pipeline body (``plans.job``, batch and streaming alike) writes four
+tables (documents_text, documents_spans, partition_metrics, done_urls).
+SURVEY B2 names Iceberg (``writeTo(...).append()``) as the production
+sink; this sandbox has no Iceberg runtime jars, so the shipped sink is
+parquet - but the pipeline only talks to the ``TableSink`` protocol
+below, so swapping sinks is a constructor argument, not a rewrite.
 
 ParquetSink (runs here)
     Directory-per-table under a root; append = ``write.mode("append")``,
-    read-back = ``spark.read.parquet`` with absent-table -> None.  The
+    read-back = ``spark.read.parquet`` with absent-table -> None;
+    ``documents_text`` is partitioned by ``run_id``, so ``read_run``
+    opens one run's directory - O(run), not O(table).  The
     manifest-last commit protocol and ``heal_torn`` exist BECAUSE this
     sink's multi-table append is not atomic: a crash between the text
     write and the manifest append leaves the torn window the healer
@@ -44,17 +46,22 @@ import os
 from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 
 class TableSink(Protocol):
     """What the pipeline needs from a sink: append rows to a named
-    table, read a named table back (None when it does not exist yet),
-    and name the table's location for reporting."""
+    table, read a named table (or one run's rows of it) back (None when
+    absent), and name the table's location for reporting."""
 
     def append(self, df: DataFrame, table: str) -> None: ...
 
     def read_or_none(self, spark: SparkSession,
                      table: str) -> DataFrame | None: ...
+
+    def read_run(self, spark: SparkSession, table: str,
+                 run_id: str) -> DataFrame | None: ...
 
     def location(self, table: str) -> str: ...
 
@@ -69,7 +76,10 @@ class ParquetSink:
         return os.path.join(self.root, table)
 
     def append(self, df: DataFrame, table: str) -> None:
-        df.write.mode("append").parquet(self.location(table))
+        writer = df.write.mode("append")
+        if table == "documents_text":  # the one partitioned table
+            writer = writer.partitionBy("run_id")
+        writer.parquet(self.location(table))
 
     def read_or_none(self, spark: SparkSession,
                      table: str) -> DataFrame | None:
@@ -79,8 +89,25 @@ class ParquetSink:
         # without merging, which footer Spark samples decides whether
         # new columns appear.  Merging pins the union deterministically.
         try:
-            return (spark.read.option("mergeSchema", "true")
-                    .parquet(self.location(table)))
+            df = (spark.read.option("mergeSchema", "true")
+                  .parquet(self.location(table)))
+        except Exception:
+            return None
+        if dict(df.dtypes).get("run_id", "string") != "string":
+            # partition type inference read run_id=000123456789 as a number
+            df = spark.read.schema(df.drop("run_id").schema.add(
+                "run_id", StringType())).parquet(self.location(table))
+        return df
+
+    def read_run(self, spark: SparkSession, table: str,
+                 run_id: str) -> DataFrame | None:
+        """One run's rows of documents_text: only its directory is opened;
+        None when the run wrote no rows (so made no directory)."""
+        path = os.path.join(self.location(table), f"run_id={run_id}")
+        try:
+            # one write made these files: one schema, nothing to merge
+            return spark.read.parquet(path).withColumn("run_id",
+                                                       F.lit(run_id))
         except Exception:
             return None
 
@@ -130,3 +157,8 @@ class IcebergSink:
             return spark.table(self.location(table))
         except Exception:
             return None
+
+    def read_run(self, spark: SparkSession, table: str,
+                 run_id: str) -> DataFrame | None:
+        df = self.read_or_none(spark, table)
+        return None if df is None else df.filter(F.col("run_id") == run_id)

@@ -5,8 +5,8 @@ table is a static snapshot, so streaming is optional - micro-batch resume
 (checkpoint anti-join, operators/checkpoint.py) covers incremental crawls.
 This wrapper exists for continuously-landing crawl data: ``readStream``
 over the pages directory -> stateful first-seen url dedup -> ``foreachBatch``
-reusing the exact same batch pipeline (same kernels, same skew handling),
-with a watermark on ``warc_ts`` for late snapshots.
+running ``run_pipeline``'s body (same kernels, skew handling, sink and four
+tables, so both can share one output), with a watermark on ``warc_ts``.
 
 Design note for scale: ``foreachBatch`` (not ``writeStream`` operators)
 because the extraction stage needs the skew repartition + multi-sink
@@ -17,13 +17,18 @@ transactions.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupStateTimeout
+from pyspark.sql.types import (
+    LongType, StringType, StructField, StructType, TimestampType,
+)
 
-from ..operators.checkpoint import append_manifest, filter_done
-from ..operators.extraction import extract_documents, pdf_magic_filter
-from ..operators.skew import size_bucketed_repartition
+from ..operators.sessions import DEFAULT_GAP_US
+from ..plans.job import _extract_and_commit, heal_torn
+from ..plans.sinks import ParquetSink
 from ..sources import PAGES_SCHEMA
 
 
@@ -53,11 +58,6 @@ def dedup_first_seen(pages_stream: DataFrame, url_col: str = "url",
     State per key: a single snapshot counter - bounded by key
     cardinality, not by stream length.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType, TimestampType,
-    )
-
     payload_cols = payload_cols or []
     in_fields = {f.name: f for f in pages_stream.schema.fields}
     out_schema = StructType(
@@ -135,61 +135,33 @@ def stream_pages(spark: SparkSession, source_dir: str,
 def start_extraction_stream(spark: SparkSession, source_dir: str,
                             output_dir: str, checkpoint_dir: str,
                             trigger_once: bool = True,
-                            first_seen: bool = True,
                             max_files_per_trigger: int = 16):
-    """Continuous extraction: each micro-batch runs the batch pipeline.
+    """Continuous extraction: each micro-batch is one pipeline run.
 
-    ``first_seen=True`` (default) puts the stateful first-seen url dedup
-    BEFORE extraction, so a url recurring across micro-batches is
-    extracted exactly once even within a single run - semantically equal
-    to the batch ``latest_per_url``+manifest path.  The manifest anti-join
-    stays as the replay/restart guard (state checkpoint and manifest
-    commit independently).
+    The stateful first-seen url dedup runs BEFORE extraction, so a url
+    recurring across micro-batches is extracted exactly once (the batch
+    ``latest_per_url``+manifest semantics); each micro-batch then runs
+    ``run_pipeline``'s body under a fresh ``run_id`` - a replayed batch
+    never reads back an earlier attempt's rows - into the same four
+    tables.  The manifest anti-join stays as the replay/restart guard.
     """
-    import os
-
-    from ..plans.job import heal_torn
-
+    sink = ParquetSink(output_dir)
     # converge any torn batch a crashed run left (text written, manifest
     # missing) BEFORE the streaming checkpoint replays that batch - the
     # healed manifest makes the replay's filter_done skip those urls, so
     # no duplicate text rows are appended
-    heal_torn(spark, output_dir, checkpoint_dir, write_spans=False)
+    heal_torn(spark, output_dir, checkpoint_dir, sink=sink)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        run_id = f"batch-{batch_id}"
-        text_path = os.path.join(output_dir, "documents_text")
-        pages = pdf_magic_filter(batch_df)
-        pages = filter_done(pages, checkpoint_dir)
-        size_col = "n_bytes" if "n_bytes" in pages.columns else None
-        pages = size_bucketed_repartition(pages, size_col=size_col)
-        # single action through the UDF; documents_text is partitioned by
-        # run_id ("batch-N" - never numeric, so partition-column type
-        # inference always yields string) so the manifest read-back below
-        # touches ONLY this batch's files - O(batch), not O(table)
-        (extract_documents(pages)
-         .withColumn("run_id", F.lit(run_id))
-         .write.mode("append").partitionBy("run_id").parquet(text_path))
-        part_dir = os.path.join(text_path, f"run_id={run_id}")
-        # an empty batch writes no partition directory; probe by reading
-        # rather than os.path (which is always False on HDFS/S3 paths)
-        try:
-            written = (spark.read.option("basePath", text_path)
-                       .parquet(part_dir))
-        except AnalysisException:
-            return
-        append_manifest(written, checkpoint_dir)
+        _extract_and_commit(batch_df, uuid.uuid4().hex[:12], sink,
+                            checkpoint_dir)
 
     stream = stream_pages(spark, source_dir,
                           max_files_per_trigger=max_files_per_trigger)
-    if first_seen:
-        payload = [c for c in stream.columns if c not in ("url", "warc_ts")]
-        stream = (dedup_first_seen(stream, payload_cols=payload)
-                  .withColumnRenamed("first_ts", "warc_ts")
-                  .drop("n_snapshots"))
-    writer = (stream
+    payload = [c for c in stream.columns if c not in ("url", "warc_ts")]
+    writer = (dedup_first_seen(stream, payload_cols=payload)
+              .withColumnRenamed("first_ts", "warc_ts")
+              .drop("n_snapshots")
               .writeStream
               .outputMode("append")
               .option("checkpointLocation",
@@ -234,10 +206,6 @@ def streaming_sessionize(events_stream: DataFrame,
     scale, never heap-unbounded.
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from ..operators.sessions import DEFAULT_GAP_US
 
     gap = DEFAULT_GAP_US if gap_us is None else gap_us
     in_user = next(f for f in events_stream.schema.fields

@@ -262,3 +262,53 @@ def test_parquet_sink_merges_mixed_schemas(spark, tmp_path):
     assert set(got.columns) == {"url", "text", "info"}
     rows = {r["url"]: r["info"] for r in got.collect()}
     assert rows["u1"] is None and rows["u2"] == {"Title": "t"}
+
+
+def test_torn_batch_keeps_numeric_looking_run_id(spark, corpus_path,
+                                                 tmp_path):
+    """``run_id`` is a partition directory of documents_text; partition
+    type inference would read ``run_id=000123456789`` back as a bigint
+    123456789.  The sink pins it to string, so the metrics rows a heal
+    derives still carry the id verbatim."""
+    import shutil
+
+    from livre_spark.operators.checkpoint import manifest_path
+
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    info1 = run_pipeline(spark, corpus_path, out, checkpoint_dir=ckpt,
+                         run_id="000123456789")
+    shutil.rmtree(manifest_path(ckpt))
+    shutil.rmtree(os.path.join(out, "partition_metrics"))
+
+    info2 = run_pipeline(spark, corpus_path, out, checkpoint_dir=ckpt)
+    assert info2["n_healed"] == info1["n_docs"] and info2["n_docs"] == 0
+    metrics = spark.read.parquet(os.path.join(out, "partition_metrics"))
+    assert dict(metrics.dtypes)["run_id"] == "string"
+    rows = metrics.collect()
+    assert {r["run_id"] for r in rows} == {"000123456789"}
+    assert sum(r["n_docs"] for r in rows) == info1["n_docs"]
+
+
+def test_read_back_opens_only_this_run(spark, corpus_path, tmp_path):
+    """The body's read-back of a second run into a non-empty output
+    opens only that run's ``documents_text/run_id=<run>/`` files."""
+    from livre_spark.plans.sinks import ParquetSink
+
+    read_back = []
+
+    class SpySink(ParquetSink):
+        def read_run(self, spark, table, run_id):
+            df = super().read_run(spark, table, run_id)
+            read_back.append(df)
+            return df
+
+    out = str(tmp_path / "out")
+    first = run_pipeline(spark, corpus_path, out)
+    info = run_pipeline(spark, corpus_path, out, sink=SpySink(out))
+    files = read_back[0].inputFiles()
+    assert files and all(
+        f"/documents_text/run_id={info['run_id']}/" in f for f in files)
+    assert os.listdir(os.path.join(
+        out, "documents_text", f"run_id={first['run_id']}"))
+    assert info["n_docs"] == first["n_docs"] > 0

@@ -6,6 +6,7 @@ import re
 import pytest
 
 import __spark_entry__ as em
+from scripts.plan_audit import executed_plans
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -93,23 +94,14 @@ def test_hot_bucket_cap_is_broadcast_anti_join(spark, name):
 
 @pytest.mark.parametrize("name", ["dedup_simhash", "dedup_simhash_pairs",
                                   "sim_near_dup", "sim_topk_lsh"])
-def test_signature_stages_are_arrow_maps(spark, monkeypatch, name):
+def test_signature_stages_are_arrow_maps(spark, name):
     """SimHash signatures and sign-LSH keys are built in one mapInArrow
     pass each; the SimHash stage has no shingle explode and no
     per-document aggregate left.  The pair queries read their signature
     frame through a lazy localCheckpoint, whose executed plan is a bare
     RDD scan, so the plans of checkpointed frames are audited too."""
-    frame_cls = type(spark.range(1))
-    plans = []
-    checkpoint = frame_cls.localCheckpoint
-
-    def spy(df, *args, **kwargs):
-        plans.append(_plan(df))
-        return checkpoint(df, *args, **kwargs)
-
-    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
-    plans.append(_plan(em.queries()[name](spark, SF_DIR)))
-    plan = "\n".join(plans)
+    plan = executed_plans(spark,
+                          lambda: em.queries()[name](spark, SF_DIR))
     assert "MapInArrow" in plan, plan
     if name == "dedup_simhash":
         assert "HashAggregate" not in plan and "Generate" not in plan, plan

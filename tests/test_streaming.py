@@ -196,3 +196,64 @@ def test_streaming_sessionize_matches_batch(spark, tmp_path):
     assert set(got) == set(want) - open_keys
     for k in got:
         assert got[k] == want[k], (k, got[k], want[k])
+
+
+def _rows(spark, out, table, cols):
+    return sorted(tuple(r) for r in spark.read.parquet(
+        os.path.join(out, table)).select(*cols).collect())
+
+
+def test_stream_and_batch_write_the_same_tables(spark, tmp_path):
+    """A stream and run_pipeline over one corpus run the same body: the
+    same text and span rows, and both write metrics and a manifest."""
+    from livre_spark.plans.job import run_pipeline
+
+    src = write_corpus(str(tmp_path / "drop"), 20)
+    streamed = str(tmp_path / "stream"), str(tmp_path / "stream_ckpt")
+    start_extraction_stream(spark, src, *streamed).awaitTermination(
+        timeout=180)
+    batched = str(tmp_path / "batch"), str(tmp_path / "batch_ckpt")
+    run_pipeline(spark, src, *batched)
+
+    def tables(out, ckpt):
+        return (_rows(spark, out, "documents_text",
+                      ["url", "text", "n_pages", "error"]),
+                _rows(spark, out, "documents_spans",
+                      ["url", "page", "x", "y", "off", "len"]),
+                sum(r[0] for r in _rows(spark, out, "partition_metrics",
+                                        ["n_docs"])),
+                _rows(spark, ckpt, "done_urls", ["url"]))
+
+    stream, batch = tables(*streamed), tables(*batched)
+    text, spans, n_metrics, manifest = batch
+    assert text and spans
+    assert n_metrics == len(text) == len(manifest)
+    assert stream == batch
+
+
+def test_empty_run_writes_no_manifest_rows(spark, tmp_path):
+    """A run with nothing to extract (HTML rows only, no html_mode) into
+    an empty output returns n_docs 0 and commits no manifest rows, in
+    run_pipeline and in the stream alike."""
+    import datetime
+
+    from livre_spark.operators.checkpoint import read_done_urls
+    from livre_spark.plans.job import run_pipeline
+    from livre_spark.sources import PAGES_SCHEMA
+
+    src = str(tmp_path / "drop")
+    spark.createDataFrame(
+        [(f"h://{i}", datetime.datetime(2026, 1, 1),
+          bytearray(b"<html><p>plain page</p></html>"), "", "en")
+         for i in range(3)], PAGES_SCHEMA).coalesce(1).write.parquet(src)
+
+    ckpt = str(tmp_path / "batch_ckpt")
+    info = run_pipeline(spark, src, str(tmp_path / "batch"),
+                        checkpoint_dir=ckpt)
+    assert info["n_docs"] == 0
+    assert read_done_urls(spark, ckpt) is None
+
+    ckpt = str(tmp_path / "stream_ckpt")
+    start_extraction_stream(spark, src, str(tmp_path / "stream"),
+                            ckpt).awaitTermination(timeout=180)
+    assert read_done_urls(spark, ckpt) is None
