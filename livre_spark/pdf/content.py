@@ -3,9 +3,12 @@
 Mirrors the reference exactly:
 
 - two-pass operator tokenization: recognize operand spans, read the 1-3
-  char operator, re-parse operands with the operator's typed parser
-  (content/operators/mod.rs:86-151).  Unknown operators are skipped with
-  their operands (mod.rs:147).
+  char operator up to the delimiter set ``()<>[]{}/% \\t\\r\\n``, re-parse
+  operands with the operator's typed parser (content/operators/mod.rs:
+  86-151).  Unknown operators are skipped with their operands
+  (mod.rs:147).  :func:`tokenize` is the one operator loop; both page
+  extractors consume its operator list, and :func:`parse_operator` is
+  the per-operator reference shape it is tested against.
 - text state machine: BT opens; state/positioning ops pre-apply until the
   first Tf constructs the text object; showing ops yield
   ``((e, f), decoded_text)``; ET ends (content/state/text.rs:225-336).
@@ -178,16 +181,19 @@ def parse_operator(buf: bytes, pos: int):
 
 # one regex step of the fast tokenizer loop: optional whitespace, then
 # either a run of non-delimiter bytes (a number operand OR an operator
-# token) or an opening byte that needs a balanced / name scanner.
-_TOKEN = re.compile(rb"[ \t\r\n]*(?:([^()<>\[\]{}/%\s]+)|([(\[</]))")
+# token) or an opening byte that needs a balanced / name scanner.  The
+# excluded class is exactly lex.DELIMS: \x0b and \x0c are NOT delimiters
+# (``\s`` would make them so), they lex as operator bytes.
+_TOKEN = re.compile(rb"[ \t\r\n]*(?:([^()<>\[\]{}/% \t\r\n]+)|([(\[</]))")
 
 
 def tokenize(content: bytes):
-    """Iterate operators over a page content stream.
+    """The operators of a page content stream, as a list.
 
-    Behaviorally identical to repeated ``parse_operator`` calls (a
-    property pinned by tests), but drives the loop with one compiled
-    regex instead of per-byte helpers - the kernel's hottest path.
+    Behaviorally identical to repeated ``parse_operator`` calls (pinned
+    by the property tests in tests/test_content_ops.py), but drives the
+    loop with one compiled regex instead of per-byte helpers - the
+    kernel's hottest path.  Unknown operators appear as ``(b"NI", op)``.
 
     Returns ``(ops, error)`` - on a parse failure mid-stream, ops so far
     are kept and the error mirrors the reference tests' full-consumption
@@ -489,8 +495,8 @@ def page_spans(ops, segments):
 def extract_page_twopass(content: bytes, cmaps=None):
     """Reference-shaped two-pass extraction (tokenize -> Display text ->
     span state machine).  Kept as the equivalence oracle for the fused
-    single-pass implementation below (tests assert byte-identical output
-    over the fixture corpus)."""
+    state machine of :func:`extract_page` below (tests assert
+    byte-identical output over the fixture corpus)."""
     ops, error = tokenize(content)
     text, segments = page_text_segments(ops, cmaps)
     spans, span_error = page_spans(ops, segments)
@@ -502,14 +508,14 @@ _OUTSIDE, _BUILD, _ITER, _DEAD = 0, 1, 2, 3
 
 
 def extract_page(content: bytes, cmaps=None):
-    """Page content bytes -> ``(text, spans, error)`` - fused single pass.
+    """Page content bytes -> ``(text, spans, error)``.
 
     Semantically identical to :func:`extract_page_twopass` (and therefore
     to the reference's two separate consumption paths: the Display text
     stream of examples/text.rs and the text-object state machine of
-    state/text.rs), but tokenization, text assembly and the span machine
-    run in one loop with no intermediate operator list - the kernel's
-    hottest path.
+    state/text.rs), but text assembly and the span machine run fused in
+    one pass over :func:`tokenize`'s operators - the kernel's hottest
+    path.
 
     ``spans`` are ``(x, y, off, len)`` with character offsets into the
     page text.  ``error`` is the first structural error (spans collected
@@ -520,56 +526,13 @@ def extract_page(content: bytes, cmaps=None):
     off = 0
     cur_font = None
     spans: list[tuple[float, float, int, int]] = []
-    tok_error = None
     span_error = None
     state = _OUTSIDE
     matrix = params = None
 
-    pos = 0
-    n = len(content)
-    op_spans: list[int] = []
-    match = _TOKEN.match
-    known = _KNOWN_OPS
-
-    while True:
-        try:
-            m = match(content, pos)
-            if m is None:
-                tail = lex.skip_ws(content, pos)
-                if not (tail >= n and not op_spans):
-                    tok_error = "ContentStreamNotFullyConsumed"
-                break
-            simple, opening = m.group(1), m.group(2)
-            if opening is not None:
-                start = m.end() - 1
-                c = opening[0]
-                if c == 0x2F:
-                    _, _, pos = ob.recognize_name(content, start)
-                elif c == 0x28:
-                    _, _, pos = lex.recognize_parens(content, start)
-                elif c == 0x5B:
-                    _, _, pos = lex.recognize_brackets(content, start)
-                else:
-                    _, _, pos = lex.recognize_angles(content, start)
-                op_spans.append(start)
-                continue
-            start = m.start(1)
-            if content[start] in _NUM_START:
-                op_spans.append(start)
-                pos = m.end()
-                continue
-            name = simple[:3]
-            pos = start + len(name)
-            if name not in known:
-                op_spans = []
-                continue
-            op = (name, *_parse_operands(name, content, op_spans))
-            op_spans = []
-        except ParseError:
-            tok_error = "ContentStreamNotFullyConsumed"
-            break
-
-        # ---- fused Display-text + span-machine handling of one operator
+    ops, tok_error = tokenize(content)
+    for op in ops:
+        name = op[0]
         if name == b"BT":
             parts.append("\n")
             off += 1
@@ -644,7 +607,7 @@ def extract_page(content: bytes, cmaps=None):
         elif name in _STATE_OPS or name in _POSITIONING_OPS:
             if state == _BUILD or state == _ITER:
                 _preapply(op, matrix, params)
-        # T* handled above via _POSITIONING_OPS; NI never reaches here
+        # T* handled above via _POSITIONING_OPS; NI falls through
 
     if state == _BUILD and tok_error is None:
         span_error = span_error or "IncompleteTextObject"

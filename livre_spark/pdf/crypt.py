@@ -293,6 +293,34 @@ def _aes_decrypt_block_fast(rkw_dec: list[list[int]], block: bytes) -> bytes:
     return ((v0 << 96) | (v1 << 64) | (v2 << 32) | v3).to_bytes(16, "big")
 
 
+def _evp_one_shot(lib, setup, data: bytes) -> bytes | None:
+    """One libcrypto cipher pass over ``data``: a fresh context, the
+    cipher's ``setup(ctx)`` (cipher, key, iv, padding; falsy = failed),
+    then Update + Final.  None when any step fails."""
+    import ctypes
+
+    ctx = lib.EVP_CIPHER_CTX_new()
+    if not ctx:
+        return None
+    try:
+        if not setup(ctx):
+            return None
+        out = ctypes.create_string_buffer(len(data) + 16)
+        outl = ctypes.c_int(0)
+        if not lib.EVP_CipherUpdate(ctx, out, ctypes.byref(outl),
+                                    data, len(data)):
+            return None
+        n = outl.value
+        fin = ctypes.c_int(0)
+        if not lib.EVP_CipherFinal_ex(
+                ctx, ctypes.cast(ctypes.byref(out, n), ctypes.c_char_p),
+                ctypes.byref(fin)):
+            return None
+        return out.raw[: n + fin.value]
+    finally:
+        lib.EVP_CIPHER_CTX_free(ctx)
+
+
 def _load_libcrypto():
     """Optional AES-CBC acceleration over the system OpenSSL libcrypto
     (the same library hashlib already links).  Returns a configured
@@ -326,22 +354,13 @@ def _load_libcrypto():
             P, ctypes.c_char_p, ctypes.POINTER(ctypes.c_int)]
         # smoke-test one known AES-128 vector (FIPS-197 C.1) before
         # trusting the handle for real work
-        ctx = lib.EVP_CIPHER_CTX_new()
-        try:
-            key = bytes(range(16))
-            pt = bytes.fromhex("00112233445566778899aabbccddeeff")
-            out = ctypes.create_string_buffer(32)
-            outl = ctypes.c_int(0)
-            ok = (lib.EVP_CipherInit_ex(ctx, lib.EVP_aes_128_cbc(), None,
-                                        key, b"\x00" * 16, 1)
-                  and lib.EVP_CIPHER_CTX_set_padding(ctx, 0)
-                  and lib.EVP_CipherUpdate(ctx, out, ctypes.byref(outl),
-                                           pt, 16))
-            if not ok or out.raw[:16] != bytes.fromhex(
-                    "69c4e0d86a7b0430d8cdb78070b4c55a"):
-                return None
-        finally:
-            lib.EVP_CIPHER_CTX_free(ctx)
+        got = _evp_one_shot(lib, lambda ctx: (
+            lib.EVP_CipherInit_ex(ctx, lib.EVP_aes_128_cbc(), None,
+                                  bytes(range(16)), b"\x00" * 16, 1)
+            and lib.EVP_CIPHER_CTX_set_padding(ctx, 0)),
+            bytes.fromhex("00112233445566778899aabbccddeeff"))
+        if got != bytes.fromhex("69c4e0d86a7b0430d8cdb78070b4c55a"):
+            return None
         return lib
     except Exception:
         return None
@@ -386,32 +405,11 @@ def _fetch_rc4():
 
 
 def _evp_rc4_raw(lib, cipher, key: bytes, data: bytes) -> bytes | None:
-    import ctypes
-
-    ctx = lib.EVP_CIPHER_CTX_new()
-    if not ctx:
-        return None
-    try:
-        if not lib.EVP_CipherInit_ex(ctx, cipher, None, None, None, 1):
-            return None
-        if not lib.EVP_CIPHER_CTX_set_key_length(ctx, len(key)):
-            return None
-        if not lib.EVP_CipherInit_ex(ctx, None, None, key, None, 1):
-            return None
-        out = ctypes.create_string_buffer(len(data) + 16)
-        outl = ctypes.c_int(0)
-        if not lib.EVP_CipherUpdate(ctx, out, ctypes.byref(outl),
-                                    data, len(data)):
-            return None
-        n = outl.value
-        fin = ctypes.c_int(0)
-        if not lib.EVP_CipherFinal_ex(
-                ctx, ctypes.cast(ctypes.byref(out, n), ctypes.c_char_p),
-                ctypes.byref(fin)):
-            return None
-        return out.raw[: n + fin.value]
-    finally:
-        lib.EVP_CIPHER_CTX_free(ctx)
+    # RC4 is variable-key: init without a key, size it, then key it
+    return _evp_one_shot(lib, lambda ctx: (
+        lib.EVP_CipherInit_ex(ctx, cipher, None, None, None, 1)
+        and lib.EVP_CIPHER_CTX_set_key_length(ctx, len(key))
+        and lib.EVP_CipherInit_ex(ctx, None, None, key, None, 1)), data)
 
 
 _LEGACY_PROVIDER = None
@@ -434,33 +432,11 @@ def _evp_aes_cbc_nopad(key: bytes, iv: bytes, data: bytes,
     lib = _LIBCRYPTO
     if lib is None or len(key) not in (16, 32) or len(data) % 16:
         return None
-    import ctypes
-
     cipher = (lib.EVP_aes_128_cbc() if len(key) == 16
               else lib.EVP_aes_256_cbc())
-    ctx = lib.EVP_CIPHER_CTX_new()
-    if not ctx:
-        return None
-    try:
-        if not lib.EVP_CipherInit_ex(ctx, cipher, None, key, iv,
-                                     1 if enc else 0):
-            return None
-        if not lib.EVP_CIPHER_CTX_set_padding(ctx, 0):
-            return None
-        out = ctypes.create_string_buffer(len(data) + 16)
-        outl = ctypes.c_int(0)
-        if not lib.EVP_CipherUpdate(ctx, out, ctypes.byref(outl),
-                                    data, len(data)):
-            return None
-        n = outl.value
-        fin = ctypes.c_int(0)
-        if not lib.EVP_CipherFinal_ex(
-                ctx, ctypes.cast(ctypes.byref(out, n), ctypes.c_char_p),
-                ctypes.byref(fin)):
-            return None
-        return out.raw[: n + fin.value]
-    finally:
-        lib.EVP_CIPHER_CTX_free(ctx)
+    return _evp_one_shot(lib, lambda ctx: (
+        lib.EVP_CipherInit_ex(ctx, cipher, None, key, iv, 1 if enc else 0)
+        and lib.EVP_CIPHER_CTX_set_padding(ctx, 0)), data)
 
 
 def _aes_cbc_encrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:

@@ -6,7 +6,7 @@ property merge (structure/pages.rs:157-239), the page content assembly
 (pages.rs:273-291) and object streams (structure/object_stream.rs).
 
 The whole lifecycle runs on a single in-memory byte string - in the Spark
-engine this is the body of one per-row call inside a ``mapInPandas`` batch.
+engine this is the body of one per-row call inside a ``mapInArrow`` batch.
 """
 
 from __future__ import annotations

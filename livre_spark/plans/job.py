@@ -54,7 +54,8 @@ from .sinks import ParquetSink, TableSink
 def build_session(app_name: str = "livre-spark", cores: str | int = "*",
                   shuffle_partitions: int | None = None,
                   extra_conf: dict | None = None) -> SparkSession:
-    """local[cores] session tuned for the extraction workload."""
+    """local[cores] session tuned for the extraction workload;
+    ``extra_conf`` entries override any setting below."""
     n = (os.cpu_count() or 8) if cores == "*" else int(cores)
     builder = (SparkSession.builder
                .appName(app_name)
@@ -63,14 +64,9 @@ def build_session(app_name: str = "livre-spark", cores: str | int = "*",
                        str(shuffle_partitions or max(2 * n, 8)))
                .config("spark.sql.execution.arrow.pyspark.enabled", "true")
                # Arrow batch size: bigger batches amortize the JVM<->Python
-               # handoff; 1024 keeps per-batch latency low for heavy-tail
-               # docs.  Tunable for throughput-oriented jobs.
-               .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                       os.environ.get("SPARK_GRAFT_ARROW_BATCH", "1024"))
-               # sink codec: lz4 compresses ~5x cheaper than snappy for
-               # this text-heavy payload at similar ratios
-               .config("spark.sql.parquet.compression.codec",
-                       os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "snappy"))
+               # handoff; 1024 keeps per-batch latency low for heavy-tail docs
+               .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
+               .config("spark.sql.parquet.compression.codec", "snappy")
                .config("spark.sql.adaptive.enabled", "true")
                # NTZ timestamps bind to the session tz on cast; pin UTC
                # so epoch math is deterministic across environments
@@ -81,18 +77,15 @@ def build_session(app_name: str = "livre-spark", cores: str | int = "*",
                # 4 MiB 0.39-0.51, 16 MiB 0.55-0.73, 32 MiB 0.85-0.94,
                # 128 MiB 0.81-0.83 of the same-window mp.Pool ceiling) -
                # per-task overhead dominates below it, tail imbalance above
-               .config("spark.sql.files.maxPartitionBytes", os.environ.get(
-                   "SPARK_GRAFT_MAX_PARTITION_BYTES", str(32 << 20)))
+               .config("spark.sql.files.maxPartitionBytes", str(32 << 20))
                # task-granularity floor: without it a corpus of
                # ~cores x maxPartitionBytes scans as EXACTLY one task per
                # core (Spark's default minPartitionNum = cores), so one
                # heavy-tail straggler gates 1/cores of the stage.  4
                # waves lets the scheduler back-fill behind stragglers;
                # the byte cap above still bounds splits for big corpora
-               .config("spark.sql.files.minPartitionNum", os.environ.get(
-                   "SPARK_GRAFT_MIN_PARTITION_NUM", str(4 * n)))
-               .config("spark.driver.memory", os.environ.get(
-                   "SPARK_GRAFT_DRIVER_MEM", "8g"))
+               .config("spark.sql.files.minPartitionNum", str(4 * n))
+               .config("spark.driver.memory", "8g")
                .config("spark.ui.enabled", "false")
                .config("spark.driver.host", "127.0.0.1"))
     for k, v in (extra_conf or {}).items():

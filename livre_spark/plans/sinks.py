@@ -11,7 +11,10 @@ ParquetSink (runs here)
     Directory-per-table under a root; append = ``write.mode("append")``,
     read-back = ``spark.read.parquet`` with absent-table -> None;
     ``documents_text`` is partitioned by ``run_id``, so ``read_run``
-    opens one run's directory - O(run), not O(table).  The
+    opens one run's directory - O(run), not O(table).  An append to a
+    ``documents_text`` that still holds top-level parquet files (the
+    layout written before that partitioning) raises ``ValueError``: a
+    read of the mixed directory would silently drop those rows.  The
     manifest-last commit protocol and ``heal_torn`` exist BECAUSE this
     sink's multi-table append is not atomic: a crash between the text
     write and the manifest append leaves the torn window the healer
@@ -42,6 +45,7 @@ IcebergSink (documented, exercised only for plan/identifier logic)
 
 from __future__ import annotations
 
+import glob
 import os
 from typing import Protocol
 
@@ -78,6 +82,7 @@ class ParquetSink:
     def append(self, df: DataFrame, table: str) -> None:
         writer = df.write.mode("append")
         if table == "documents_text":  # the one partitioned table
+            _refuse_unpartitioned(self.location(table))
             writer = writer.partitionBy("run_id")
         writer.parquet(self.location(table))
 
@@ -110,6 +115,19 @@ class ParquetSink:
                                                        F.lit(run_id))
         except Exception:
             return None
+
+
+def _refuse_unpartitioned(path: str) -> None:
+    """Raise when ``path`` holds top-level parquet files: that layout was
+    written before documents_text was partitioned by run_id, and Spark's
+    read of a directory mixing it with ``run_id=<id>/`` partitions
+    silently drops the top-level rows."""
+    if glob.glob(os.path.join(glob.escape(path), "*.parquet")):
+        raise ValueError(
+            f"{path} holds unpartitioned parquet files (written before "
+            "documents_text was partitioned by run_id); appending run_id "
+            "partitions next to them would hide their rows from every "
+            "read - move them under a run_id=<id>/ directory first")
 
 
 class IcebergSink:

@@ -1,9 +1,10 @@
-"""B1/B2: sources & sinks.
+"""B1: sources.
 
-The production table is Iceberg (``spark.read.format("iceberg")`` /
-``df.writeTo(...).append()``); parquet stands in inside the sandbox where
-no Iceberg catalog is configured.  Both paths go through these helpers so
-the pipeline code is storage-agnostic.
+The production input is an Iceberg table (``spark.read.format("iceberg")``);
+parquet stands in where no Iceberg catalog is configured, and raw crawl
+output (``.warc`` / ``.warc.gz``) is read by :mod:`.warc`.  ``read_pages``
+routes all three, so the pipeline code is storage-agnostic.  Writes go
+through the pipeline's ``TableSink`` (``plans.sinks``), not this module.
 """
 
 from __future__ import annotations
@@ -62,17 +63,3 @@ def read_pages(spark: SparkSession, source: str) -> DataFrame:
         except Exception:
             pass
     return spark.read.parquet(source)
-
-
-def write_table(df: DataFrame, target: str, mode: str = "overwrite") -> None:
-    """Write to Iceberg when the target looks like a table, else parquet."""
-    if "/" not in target and "." in target:
-        try:
-            if mode == "append":
-                df.writeTo(target).append()
-            else:
-                df.writeTo(target).createOrReplace()
-            return
-        except Exception:
-            pass
-    df.write.mode(mode).parquet(target)

@@ -2,9 +2,12 @@
 (content/operators/text/showing.rs:202-230, operators/mod.rs:228-241)."""
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from livre_spark.pdf import content as C
+from livre_spark.pdf import lex
 from livre_spark.pdf import objects as ob
+from livre_spark.pdf.errors import ParseError
 from livre_spark.pdf.api import extract_text
 from livre_spark.pdf.genpdf import build_pdf
 
@@ -98,3 +101,62 @@ def test_operand_normal_whitespace_still_parses():
     ops, err = C.tokenize(b"1.2 \t\r\n 4 Td")
     assert err is None
     assert ops[0][0] == b"Td"
+
+
+# ---- tokenize is pinned to repeated parse_operator calls ------------------
+
+def _parse_operator_loop(buf: bytes):
+    """The reference's operator iteration, one ``parse_operator`` at a
+    time; a parse failure mid-stream keeps the ops so far and maps to the
+    full-consumption error, as ``tokenize`` reports it."""
+    ops = []
+    pos = 0
+    try:
+        while lex.skip_ws(buf, pos) < len(buf):
+            op, pos = C.parse_operator(buf, pos)
+            ops.append(op)
+    except ParseError:
+        return ops, "ContentStreamNotFullyConsumed"
+    return ops, None
+
+
+@pytest.mark.parametrize("buf", [
+    b"BT \x0c ET",     # \x0c / \x0b are operator bytes, not delimiters
+    b"1 \x0b2 Td",
+    b"BT\x0cET",
+])
+def test_tokenize_matches_parse_operator_fixed(buf):
+    assert C.tokenize(buf) == _parse_operator_loop(buf)
+
+
+def test_form_feed_is_an_operator_byte():
+    assert C.tokenize(b"BT \x0c ET") == (
+        [(b"BT",), (b"NI", b"\x0c"), (b"ET",)], None)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.binary(max_size=60))
+def test_tokenize_matches_parse_operator_random_bytes(buf):
+    assert C.tokenize(buf) == _parse_operator_loop(buf)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(st.sampled_from(list(b" \t\r\n\x00\x0b\x0c\\#()<>[]{}/%"
+                                     b"+-.019ABTJjfmdDcwzLrs*'\"")),
+                max_size=30))
+def test_tokenize_matches_parse_operator_delimiter_alphabet(chars):
+    buf = bytes(chars)
+    assert C.tokenize(buf) == _parse_operator_loop(buf)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.sampled_from([
+    b"BT", b"ET", b"T*", b"(s) Tj", b"<4142> Tj", b"(a\\)b) '",
+    b"1 2 (s) \"", b"[ (a) 5 (b) ] TJ", b"/F1 9 Tf", b"3 Tc", b"7 TL",
+    b"1 0 0 1 10 20 Tm", b"5 -6 Td", b"2 3 TD", b"q", b"Q", b"BDC",
+    b"0.5 0 0 0.5 0 0 cm", b"2 Tr", b"9 Tr", b"0.4 Ts", b"110 Tz",
+    b"1.2.3 Tw", b"<< /K 1 >> BDC", b"\x0c", b"\x0b", b"\x00",
+]), max_size=25), st.sampled_from([b" ", b"\n", b"\r\n", b"\t"]))
+def test_tokenize_matches_parse_operator_op_sequences(ops, sep):
+    buf = sep.join(ops)
+    assert C.tokenize(buf) == _parse_operator_loop(buf)

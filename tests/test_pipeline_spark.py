@@ -264,6 +264,30 @@ def test_parquet_sink_merges_mixed_schemas(spark, tmp_path):
     assert rows["u1"] is None and rows["u2"] == {"Title": "t"}
 
 
+def test_parquet_sink_refuses_unpartitioned_text_layout(spark, corpus_path,
+                                                        tmp_path):
+    """An output whose documents_text holds top-level parquet files (the
+    layout written before partitioning by run_id) is refused before the
+    text append: Spark's read of the mixed directory would silently drop
+    the old rows.  The old files are left as they were."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "out")
+    text_dir = os.path.join(out, "documents_text")
+    os.makedirs(text_dir)
+    old = os.path.join(text_dir, "part-00000.parquet")
+    pq.write_table(pa.table({"url": [f"old-{i}" for i in range(9)],
+                             "text": ["t"] * 9}), old)
+    with open(old, "rb") as f:
+        before = f.read()
+    with pytest.raises(ValueError, match="documents_text"):
+        run_pipeline(spark, corpus_path, out)
+    assert os.listdir(text_dir) == ["part-00000.parquet"]
+    with open(old, "rb") as f:
+        assert f.read() == before
+
+
 def test_torn_batch_keeps_numeric_looking_run_id(spark, corpus_path,
                                                  tmp_path):
     """``run_id`` is a partition directory of documents_text; partition
