@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from livre_spark.functions import dedup as dd
 from livre_spark.functions import similarity as sim
 from livre_spark.functions import textstats as ts
+from livre_spark.operators.extraction import map_rows
 from livre_spark.operators.skew import ensure_scan_parallelism as _par
 
 SF001 = "/root/testdata/sf0.001"
@@ -42,36 +43,30 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _roundtrip_batches(batches):
-    """Per batch: text -> synthetic PDF -> full extraction kernel -> text.
+def _roundtrip_row(doc_id, text):
+    """Per row: text -> synthetic PDF -> full extraction kernel -> text.
 
     The writer guarantees (by construction) that the extracted text is
     "\\n" + original, so the DuckDB oracle can check byte identity.
     """
-    import pandas as pd
-
     from livre_spark.pdf.api import extract_text
     from livre_spark.pdf.genpdf import build_pdf, text_to_show_op
 
-    for batch in batches:
-        out = {"url": [], "text": [], "n_pages": []}
-        for doc_id, text in zip(batch["doc_id"], batch["text"]):
-            content = (b"BT /F1 12 Tf 72 720 Td "
-                       + text_to_show_op(text) + b" ET")
-            pdf = build_pdf([content])
-            result = extract_text(pdf)
-            out["url"].append(f"pdf://{int(doc_id)}")
-            out["text"].append(result["text"])
-            out["n_pages"].append(result["n_pages"])
-        yield pd.DataFrame(out)
+    content = b"BT /F1 12 Tf 72 720 Td " + text_to_show_op(text) + b" ET"
+    result = extract_text(build_pdf([content]))
+    yield {"url": f"pdf://{doc_id}", "text": result["text"],
+           "n_pages": result["n_pages"]}
+
+
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # _par: the single-row-group documents scan yields ONE task, so the
+    # whole Python kernel would run on one core (guide 2.5)
+    return _par(_t(spark, sf_dir, "documents").select("doc_id", "text"))
 
 
 def q_extract_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # _par: the single-row-group documents scan yields ONE task, so the
-    # whole Python kernel would run on one core (guide 2.5)
-    docs = _par(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-    return docs.mapInPandas(
-        _roundtrip_batches, schema="url string, text string, n_pages int")
+    return map_rows(_docs(spark, sf_dir), _roundtrip_row,
+                    "url string, text string, n_pages int")
 
 
 SQL_EXTRACT_ROUNDTRIP = """
@@ -362,7 +357,7 @@ FROM documents
 
 
 def q_quality_score(spark, sf_dir):
-    docs = _par(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = _docs(spark, sf_dir)
     return docs.select("doc_id",
                        ts.quality_score(F.col("text")).alias("quality"))
 
@@ -389,7 +384,7 @@ FROM q
 
 
 def q_lang_guess(spark, sf_dir):
-    docs = _par(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = _docs(spark, sf_dir)
     return docs.select("doc_id", ts.lang_guess(F.col("text")).alias("lang_guess"))
 
 
@@ -423,7 +418,7 @@ SQL_FINGERPRINT = "SELECT doc_id, md5(text) AS fp FROM documents"
 
 def q_bpe_token_count(spark, sf_dir):
     """BPE-ish pre-tokenizer token count (LLM-budget proxy)."""
-    docs = _par(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = _docs(spark, sf_dir)
     return docs.select("doc_id",
                        ts.bpe_token_count(F.col("text")).alias("n_bpe"))
 
@@ -438,7 +433,7 @@ FROM documents
 
 def q_fingerprint_rolling(spark, sf_dir):
     """Rabin-Karp polynomial rolling hash over document characters."""
-    docs = _par(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = _docs(spark, sf_dir)
     return docs.select("doc_id",
                        ts.rolling_fingerprint(F.col("text")).alias("rfp"))
 
@@ -1147,7 +1142,7 @@ def q_html_strip(spark, sf_dir):
     entities decoded, whitespace collapsed) - pure codegen."""
     from livre_spark.functions.htmltext import strip_tags
 
-    docs = _par(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = _docs(spark, sf_dir)
     return docs.select("doc_id", strip_tags(_mk_html_col()).alias("body"))
 
 
@@ -1156,7 +1151,7 @@ def q_html_main(spark, sf_dir):
     keep rule drops the nav/footer link farms."""
     from livre_spark.functions.htmltext import main_content
 
-    docs = _par(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = _docs(spark, sf_dir)
     return docs.select("doc_id", main_content(_mk_html_col()).alias("body"))
 
 
@@ -1210,7 +1205,14 @@ FROM m
 """
 
 
-def _real_ppm_batches(batches):
+def _md5_raster(text) -> bytes:
+    """The md5-hex of the text repeated to an 8x8 RGB raster (192 bytes)."""
+    import hashlib
+
+    return (hashlib.md5(str(text).encode()).hexdigest() * 6).encode()
+
+
+def _real_ppm_row(doc_id, text):
     """Per row: md5-hex of the text (32 ASCII chars, engine-identical)
     repeated to a 192-byte raster -> a REAL binary PPM (P6 8x8) ->
     multimodal.decode_image with fake=False - the actual header parse +
@@ -1220,28 +1222,16 @@ def _real_ppm_batches(batches):
     letters a-f 0x61-66 -> bin 6), so the f32 ratio recovers the exact
     letter count: ratio * 192 rounds to an integer DuckDB re-derives
     from regexp counts over md5(text)."""
-    import pandas as pd
-
     from livre_spark.functions.multimodal import decode_image
 
-    for batch in batches:
-        out = {"url": [], "width": [], "height": [], "f6_count": []}
-        for doc_id, text in zip(batch["doc_id"], batch["text"]):
-            raster = (__import__("hashlib")
-                      .md5(str(text).encode()).hexdigest() * 6).encode()
-            w, h, feats = decode_image(b"P6\n8 8\n255\n" + raster)
-            out["url"].append(f"pdf://{int(doc_id)}")
-            out["width"].append(w)
-            out["height"].append(h)
-            out["f6_count"].append(int(round(feats[6] * 192)))
-        yield pd.DataFrame(out)
+    w, h, feats = decode_image(b"P6\n8 8\n255\n" + _md5_raster(text))
+    yield {"url": f"pdf://{doc_id}", "width": w, "height": h,
+           "f6_count": int(round(feats[6] * 192))}
 
 
 def q_multimodal_real_decode(spark, sf_dir):
-    docs = _par(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-    return docs.mapInPandas(
-        _real_ppm_batches,
-        schema="url string, width int, height int, f6_count long")
+    return map_rows(_docs(spark, sf_dir), _real_ppm_row,
+                    "url string, width int, height int, f6_count long")
 
 
 SQL_MULTIMODAL_REAL_DECODE = """
@@ -1253,53 +1243,38 @@ FROM documents
 """
 
 
-def _real_webp_batches(batches):
+def _real_webp_row(doc_id, text):
     """Per row: the md5-hex raster (the PPM row's nibble trick) wrapped
     in a REAL VP8L WebP by the deterministic encoder twin - option mix
     cycled by doc_id (plain / subtract-green / LZ77+cache / predictor)
     so all four encode shapes hit the full decoder - then
     multimodal.decode_image end-to-end (container walk, prefix codes,
     transforms, histogram)."""
-    import hashlib
-
-    import pandas as pd
-
     from livre_spark.functions.multimodal import decode_image
     from livre_spark.functions.webp import encode_webp_lossless
 
-    for batch in batches:
-        out = {"url": [], "width": [], "height": [], "f6_count": []}
-        for doc_id, text in zip(batch["doc_id"], batch["text"]):
-            did = int(doc_id)
-            raster = (hashlib.md5(str(text).encode()).hexdigest()
-                      * 6).encode()
-            variant = did % 4
-            buf = encode_webp_lossless(
-                8, 8, raster,
-                subtract_green=variant == 1,
-                use_lz77=variant == 2,
-                cache_bits=3 if variant == 2 else 0,
-                predictor_mode=7 if variant == 3 else None)
-            w, h, feats = decode_image(buf)
-            out["url"].append(f"pdf://{did}")
-            out["width"].append(w)
-            out["height"].append(h)
-            out["f6_count"].append(int(round(feats[6] * 192)))
-        yield pd.DataFrame(out)
+    variant = doc_id % 4
+    buf = encode_webp_lossless(
+        8, 8, _md5_raster(text),
+        subtract_green=variant == 1,
+        use_lz77=variant == 2,
+        cache_bits=3 if variant == 2 else 0,
+        predictor_mode=7 if variant == 3 else None)
+    w, h, feats = decode_image(buf)
+    yield {"url": f"pdf://{doc_id}", "width": w, "height": h,
+           "f6_count": int(round(feats[6] * 192))}
 
 
 def q_webp_real_decode(spark, sf_dir):
-    docs = _par(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-    return docs.mapInPandas(
-        _real_webp_batches,
-        schema="url string, width int, height int, f6_count long")
+    return map_rows(_docs(spark, sf_dir), _real_webp_row,
+                    "url string, width int, height int, f6_count long")
 
 
 # the decode is lossless, so the expected histogram is the PPM row's
 SQL_WEBP_REAL_DECODE = SQL_MULTIMODAL_REAL_DECODE
 
 
-def _vp8_batches(batches):
+def _vp8_row(doc_id, text):
     """Per row: a CONSTANT-GRAY 16x16 image (gray = first md5(text)
     byte) wrapped in a REAL lossy VP8 WebP by the deterministic encoder
     twin (functions/vp8.py), quantizer cycled by doc_id - then decoded
@@ -1312,32 +1287,21 @@ def _vp8_batches(batches):
     independently from md5(text)."""
     import hashlib
 
-    import pandas as pd
-
     from livre_spark.functions.multimodal import decode_image
     from livre_spark.functions.vp8 import decode_webp_lossy, encode_vp8
 
-    for batch in batches:
-        out = {"url": [], "width": [], "height": [], "gray": [],
-               "bin_count": []}
-        for doc_id, text in zip(batch["doc_id"], batch["text"]):
-            did = int(doc_id)
-            c = hashlib.md5(str(text).encode()).digest()[0]
-            rgb = bytes([c, c, c]) * 256
-            webp, _ = encode_vp8(16, 16, rgb, qi=did % 9)
-            w, h, px = decode_webp_lossy(bytes(webp))
-            if px != rgb:  # explicit: assert is compiled out under -O
-                raise ValueError(f"gray {c} qi {did % 9} not exact")
-            _, _, feats = decode_image(bytes(webp))
-            out["url"].append(f"vp8://{did}")
-            out["width"].append(w)
-            out["height"].append(h)
-            out["gray"].append(px[0])
-            out["bin_count"].append(int(round(feats[c >> 4] * 768)))
-        yield pd.DataFrame(out)
+    c = hashlib.md5(str(text).encode()).digest()[0]
+    rgb = bytes([c, c, c]) * 256
+    webp, _ = encode_vp8(16, 16, rgb, qi=doc_id % 9)
+    w, h, px = decode_webp_lossy(bytes(webp))
+    if px != rgb:  # explicit: assert is compiled out under -O
+        raise ValueError(f"gray {c} qi {doc_id % 9} not exact")
+    _, _, feats = decode_image(bytes(webp))
+    yield {"url": f"vp8://{doc_id}", "width": w, "height": h,
+           "gray": px[0], "bin_count": int(round(feats[c >> 4] * 768))}
 
 
-def _jpeg_arith_batches(batches):
+def _jpeg_arith_row(doc_id, text):
     """Per row: a CONSTANT-COLOR 16x8 RGB image (r,g,b = first three
     md5(text) bytes) written as a REAL arithmetic-coded JPEG (SOF9, QM
     entropy layer - functions/jpeg.py encode_jpeg_arith) at quant=1,
@@ -1347,38 +1311,23 @@ def _jpeg_arith_batches(batches):
     md5(text)."""
     import hashlib
 
-    import pandas as pd
-
     from livre_spark.functions.jpeg import decode_jpeg, encode_jpeg_arith
 
-    for batch in batches:
-        out = {"url": [], "width": [], "height": [],
-               "r": [], "g": [], "b": []}
-        for doc_id, text in zip(batch["doc_id"], batch["text"]):
-            did = int(doc_id)
-            r, g, b = hashlib.md5(str(text).encode()).digest()[:3]
-            px = bytes((r, g, b)) * (16 * 8)
-            sub = ("444", "420", "422")[did % 3]
-            jpg = encode_jpeg_arith(16, 8, px, quant=1, subsampling=sub)
-            w, h, got = decode_jpeg(jpg)
-            if got != px:  # explicit: assert is compiled out under -O
-                raise ValueError(
-                    f"arith roundtrip not exact at doc {did}")
-            out["url"].append(f"jpg://{did}")
-            out["width"].append(w)
-            out["height"].append(h)
-            out["r"].append(got[0])
-            out["g"].append(got[1])
-            out["b"].append(got[2])
-        yield pd.DataFrame(out)
+    r, g, b = hashlib.md5(str(text).encode()).digest()[:3]
+    px = bytes((r, g, b)) * (16 * 8)
+    sub = ("444", "420", "422")[doc_id % 3]
+    w, h, got = decode_jpeg(
+        encode_jpeg_arith(16, 8, px, quant=1, subsampling=sub))
+    if got != px:  # explicit: assert is compiled out under -O
+        raise ValueError(f"arith roundtrip not exact at doc {doc_id}")
+    yield {"url": f"jpg://{doc_id}", "width": w, "height": h,
+           "r": got[0], "g": got[1], "b": got[2]}
 
 
 def q_jpeg_arith_decode(spark, sf_dir):
-    docs = _par(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-    return docs.mapInPandas(
-        _jpeg_arith_batches,
-        schema="url string, width int, height int, r long, g long,"
-               " b long")
+    return map_rows(_docs(spark, sf_dir), _jpeg_arith_row,
+                    "url string, width int, height int, r long, g long,"
+                    " b long")
 
 
 # constant-color quant=1 roundtrips exactly -> SQL derives the pixels
@@ -1393,11 +1342,9 @@ FROM documents
 
 
 def q_vp8_real_decode(spark, sf_dir):
-    docs = _par(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-    return docs.mapInPandas(
-        _vp8_batches,
-        schema="url string, width int, height int, gray long,"
-               " bin_count long")
+    return map_rows(_docs(spark, sf_dir), _vp8_row,
+                    "url string, width int, height int, gray long,"
+                    " bin_count long")
 
 
 # gray roundtrip is pixel-exact, so SQL derives everything from md5
@@ -1450,48 +1397,30 @@ FROM documents
 """
 
 
-def _pdf_images_batches(batches):
+def _pdf_images_row(doc_id, text):
     """Per row: md5-hex raster (8x8 RGB, the nibble-split trick) -> PDF
     with an embedded Flate raster XObject (every 2nd doc ENCRYPTED, so
     the per-object image decrypt path is oracle-covered) -> full
     document walk + image decode (functions/pdfimages.py)."""
-    import hashlib
-
-    import pandas as pd
-
     from livre_spark.functions.pdfimages import extract_pdf_images
     from livre_spark.pdf.genpdf import build_pdf
 
-    for batch in batches:
-        out = {"url": [], "name": [], "width": [], "height": [],
-               "kind": [], "f6_count": []}
-        for doc_id, text in zip(batch["doc_id"], batch["text"]):
-            did = int(doc_id)
-            raster = (hashlib.md5(str(text).encode()).hexdigest()
-                      * 6).encode()
-            pdf = build_pdf(
-                [b"BT (x) Tj ET"],
-                images=[{"name": "Im1", "width": 8, "height": 8,
-                         "samples": raster}],
-                encrypt="rc4-128" if did % 2 else None)
-            (row,) = extract_pdf_images(pdf)
-            if row["error"] is not None:  # explicit vs -O
-                raise ValueError(row["error"])
-            out["url"].append(f"pdf://{did}")
-            out["name"].append(row["name"])
-            out["width"].append(row["width"])
-            out["height"].append(row["height"])
-            out["kind"].append(row["kind"])
-            out["f6_count"].append(int(round(row["features"][6] * 192)))
-        yield pd.DataFrame(out)
+    pdf = build_pdf(
+        [b"BT (x) Tj ET"],
+        images=[{"name": "Im1", "width": 8, "height": 8,
+                 "samples": _md5_raster(text)}],
+        encrypt="rc4-128" if doc_id % 2 else None)
+    (row,) = extract_pdf_images(pdf)
+    if row["error"] is not None:  # explicit vs -O
+        raise ValueError(row["error"])
+    yield dict(row, url=f"pdf://{doc_id}",
+               f6_count=int(round(row["features"][6] * 192)))
 
 
 def q_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _par(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-    return docs.mapInPandas(
-        _pdf_images_batches,
-        schema="url string, name string, width int, height int,"
-               " kind string, f6_count long")
+    return map_rows(_docs(spark, sf_dir), _pdf_images_row,
+                    "url string, name string, width int, height int,"
+                    " kind string, f6_count long")
 
 
 SQL_PDF_IMAGES = """
@@ -1503,7 +1432,7 @@ FROM documents
 """
 
 
-def _audio_batches(batches):
+def _audio_row(doc_id, text):
     """Per row: text bytes as an 8-bit PCM payload inside a REAL
     RIFF/WAVE container -> multimodal._decode_wav via decode_image
     (header walk + sample extraction, the audio modality's real path).
@@ -1511,33 +1440,22 @@ def _audio_batches(batches):
     the fake-path oracle established."""
     import struct
 
-    import pandas as pd
-
     from livre_spark.functions.multimodal import decode_image
 
-    for batch in batches:
-        out = {"url": [], "sample_rate": [], "channels": [],
-               "f6_count": []}
-        for doc_id, text in zip(batch["doc_id"], batch["text"]):
-            data = str(text).encode("utf-8")
-            fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-            body = (b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data)
-            wav = b"RIFF" + struct.pack("<I", len(body)) + body
-            rate, ch, feats = decode_image(wav)
-            out["url"].append(f"pdf://{int(doc_id)}")
-            out["sample_rate"].append(rate)
-            out["channels"].append(ch)
-            out["f6_count"].append(int(round(feats[6] * len(data))))
-        yield pd.DataFrame(out)
+    data = str(text).encode("utf-8")
+    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
+    body = (b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(data)) + data)
+    rate, ch, feats = decode_image(b"RIFF" + struct.pack("<I", len(body))
+                                   + body)
+    yield {"url": f"pdf://{doc_id}", "sample_rate": rate, "channels": ch,
+           "f6_count": int(round(feats[6] * len(data)))}
 
 
 def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _par(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-    return docs.mapInPandas(
-        _audio_batches,
-        schema="url string, sample_rate int, channels int,"
-               " f6_count long")
+    return map_rows(_docs(spark, sf_dir), _audio_row,
+                    "url string, sample_rate int, channels int,"
+                    " f6_count long")
 
 
 SQL_AUDIO_FEATURES = """
@@ -1597,8 +1515,8 @@ WHERE (('0x' || substr(md5('s0' || CAST(doc_id AS VARCHAR)), 1, 15))
 _INFO_SCHEMES = ["rc4-40", "rc4-128", "aes-128"]
 
 
-def _doc_info_batches(batches):
-    """Per batch: deterministic /Info strings -> ENCRYPTED synthetic PDF
+def _doc_info_row(doc_id, text):
+    """Per row: deterministic /Info strings -> ENCRYPTED synthetic PDF
     (scheme cycles rc4-40 / rc4-128 / aes-128 by doc_id) -> full
     decryptor build -> Document.info() string decryption + decode.
 
@@ -1606,32 +1524,21 @@ def _doc_info_batches(batches):
     the DuckDB oracle re-derives them from the table - a hash-exact row
     over the crypt + /StrF + string-decode pipeline (pdf/crypt.py,
     document.py:_info_value_parser)."""
-    import pandas as pd
-
     from livre_spark.pdf.document import open_document
     from livre_spark.pdf.genpdf import build_pdf
 
-    for batch in batches:
-        out = {"url": [], "title": [], "author": [], "scheme": []}
-        for doc_id, text in zip(batch["doc_id"], batch["text"]):
-            did = int(doc_id)
-            scheme = _INFO_SCHEMES[did % 3]
-            info = {"Title": f"Doc {did}: " + str(text)[:16],
-                    "Author": f"author-{did % 7}"}
-            pdf = build_pdf([b"BT (x) Tj ET"], encrypt=scheme, info=info)
-            got = open_document(pdf).info()
-            out["url"].append(f"pdf://{did}")
-            out["title"].append(got["Title"])
-            out["author"].append(got["Author"])
-            out["scheme"].append(scheme)
-        yield pd.DataFrame(out)
+    scheme = _INFO_SCHEMES[doc_id % 3]
+    info = {"Title": f"Doc {doc_id}: " + str(text)[:16],
+            "Author": f"author-{doc_id % 7}"}
+    got = open_document(build_pdf([b"BT (x) Tj ET"], encrypt=scheme,
+                                  info=info)).info()
+    yield {"url": f"pdf://{doc_id}", "title": got["Title"],
+           "author": got["Author"], "scheme": scheme}
 
 
 def q_doc_info_crypt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _par(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-    return docs.mapInPandas(
-        _doc_info_batches,
-        schema="url string, title string, author string, scheme string")
+    return map_rows(_docs(spark, sf_dir), _doc_info_row,
+                    "url string, title string, author string, scheme string")
 
 
 SQL_DOC_INFO_CRYPT = """

@@ -29,15 +29,16 @@ from __future__ import annotations
 import struct
 import zlib
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType, FloatType, IntegerType, LongType, StringType, StructField,
     StructType,
 )
 
+from ..operators.extraction import map_rows
 from ..pdf.filters import apply_predictor
 
 FEATURE_DIM = 16
@@ -907,88 +908,60 @@ VIDEO_FEATURES_SCHEMA = StructType([
 ])
 
 
-def video_frame_batches(batches: Iterator[pd.DataFrame],
-                        sample_frames: int = 4,
-                        max_frames: int = 64) -> Iterator[pd.DataFrame]:
-    """mapInPandas body for the VIDEO modality (animated GIF is the
+def video_frame_row(mid: int, content: bytes | None,
+                    sample_frames: int = 4,
+                    max_frames: int = 64) -> Iterator[dict]:
+    """Row function for the VIDEO modality (animated GIF is the
     in-container stand-in; real codecs slot in behind the same shape):
     decode up to ``max_frames`` composited frames, uniformly sample
     ``sample_frames`` of them, average their histograms.  The per-row
     work is bounded by max_frames regardless of hostile frame counts."""
     from .gif import decode_gif_frames
 
-    for batch in batches:
-        out = {k.name: [] for k in VIDEO_FEATURES_SCHEMA.fields}
-        for mid, content in zip(batch["media_id"], batch["content"]):
-            buf = bytes(content) if content is not None else b""
-            out["media_id"].append(int(mid))
-            try:
-                w, h, frames = decode_gif_frames(buf,
-                                                 max_frames=max_frames)
-                n = len(frames)
-                k = min(sample_frames, n)
-                picks = [int(i * (n - 1) / max(k - 1, 1)) for i in
-                         range(k)] if k > 1 else [0]
-                feats = np.mean([_pixel_features(frames[p])
-                                 for p in picks], axis=0)
-                out["n_frames"].append(n)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["sampled"].append(len(picks))
-                out["features"].append([float(x) for x in feats])
-                out["error"].append(None)
-            except Exception as exc:  # containment per row
-                out["n_frames"].append(None)
-                out["width"].append(None)
-                out["height"].append(None)
-                out["sampled"].append(None)
-                out["features"].append(None)
-                out["error"].append(f"{type(exc).__name__}: {exc}")
-        yield pd.DataFrame(out)
+    try:
+        w, h, frames = decode_gif_frames(content or b"",
+                                         max_frames=max_frames)
+        n = len(frames)
+        k = min(sample_frames, n)
+        picks = [int(i * (n - 1) / max(k - 1, 1)) for i in
+                 range(k)] if k > 1 else [0]
+        feats = np.mean([_pixel_features(frames[p]) for p in picks], axis=0)
+        yield {"media_id": mid, "n_frames": n, "width": w, "height": h,
+               "sampled": len(picks),
+               "features": [float(x) for x in feats]}
+    except Exception as exc:  # containment per row
+        yield {"media_id": mid, "error": f"{type(exc).__name__}: {exc}"}
 
 
 def extract_video_features(media: DataFrame, sample_frames: int = 4,
                            max_frames: int = 64) -> DataFrame:
     """Vectorized frame-sampled features over a binary video column."""
-    def body(batches):
-        return video_frame_batches(batches, sample_frames=sample_frames,
-                                   max_frames=max_frames)
-
-    return (media.select("media_id", "content")
-            .mapInPandas(body, schema=VIDEO_FEATURES_SCHEMA))
+    row = partial(video_frame_row, sample_frames=sample_frames,
+                  max_frames=max_frames)
+    return map_rows(media.select("media_id", "content"), row,
+                    VIDEO_FEATURES_SCHEMA)
 
 
-def media_feature_batches(batches: Iterator[pd.DataFrame],
-                          fake: bool = True) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: (media_id, kind, content) -> MEDIA_FEATURES_SCHEMA."""
-    for batch in batches:
-        out = {k.name: [] for k in MEDIA_FEATURES_SCHEMA.fields}
-        for mid, kind, content in zip(batch["media_id"], batch["kind"],
-                                      batch["content"]):
-            buf = bytes(content) if content is not None else b""
-            out["media_id"].append(int(mid))
-            out["kind"].append(kind)
-            out["n_bytes"].append(len(buf))
-            try:
-                w, h, feats = decode_image(buf, fake=fake)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["features"].append(feats)
-                out["error"].append(None)
-            except Exception as exc:  # containment: a poisoned payload
-                dims = image_dimensions(buf)  # must not kill the job;
-                # header-only metadata survives unsupported-codec rows
-                out["width"].append(dims[0] if dims else None)
-                out["height"].append(dims[1] if dims else None)
-                out["features"].append(None)
-                out["error"].append(f"{type(exc).__name__}: {exc}")
-        yield pd.DataFrame(out)
+def media_feature_row(mid: int, kind: str, content: bytes | None,
+                      fake: bool = True) -> Iterator[dict]:
+    """Row function: (media_id, kind, content) -> one
+    MEDIA_FEATURES_SCHEMA row."""
+    buf = content or b""
+    out = {"media_id": mid, "kind": kind, "n_bytes": len(buf)}
+    try:
+        out["width"], out["height"], out["features"] = \
+            decode_image(buf, fake=fake)
+    except Exception as exc:  # containment: a poisoned payload
+        dims = image_dimensions(buf)  # must not kill the job;
+        # header-only metadata survives unsupported-codec rows
+        if dims:
+            out["width"], out["height"] = dims[0], dims[1]
+        out["error"] = f"{type(exc).__name__}: {exc}"
+    yield out
 
 
 def extract_media_features(media: DataFrame, fake: bool = True) -> DataFrame:
     """Vectorized feature extraction over a binary ``content`` column."""
-    def body(batches):
-        return media_feature_batches(batches, fake=fake)
-
-    return (media.select("media_id", "kind", "content")
-            .mapInPandas(body, schema=MEDIA_FEATURES_SCHEMA))
+    return map_rows(media.select("media_id", "kind", "content"),
+                    partial(media_feature_row, fake=fake),
+                    MEDIA_FEATURES_SCHEMA)

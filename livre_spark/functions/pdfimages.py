@@ -18,14 +18,15 @@ every other kernel follows.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType, FloatType, IntegerType, LongType, StringType, StructField,
     StructType,
 )
 
+from ..operators.extraction import map_rows
 from .multimodal import _pixel_features
 
 _CS_COMPONENTS = {"DeviceRGB": 3, "DeviceGray": 1, "CalRGB": 3,
@@ -106,43 +107,23 @@ PDF_IMAGES_SCHEMA = StructType([
 ])
 
 
-def pdf_image_batches(batches: Iterator[pd.DataFrame],
-                      max_images: int = 64) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: (url, html) -> one row per embedded image."""
-    for batch in batches:
-        out = {f.name: [] for f in PDF_IMAGES_SCHEMA.fields}
-
-        def emit(url, name=None, page=None, width=None, height=None,
-                 kind=None, n_bytes=0, features=None, error=None):
-            out["url"].append(url)
-            out["name"].append(name)
-            out["page"].append(page)
-            out["width"].append(width)
-            out["height"].append(height)
-            out["kind"].append(kind)
-            out["n_bytes"].append(n_bytes)
-            out["features"].append(features)
-            out["error"].append(error)
-
-        for url, html in zip(batch["url"], batch["html"]):
-            buf = bytes(html) if html is not None else b""
-            try:
-                for r in extract_pdf_images(buf, max_images=max_images):
-                    emit(url, r["name"], r["page"], r["width"],
-                         r["height"], r["kind"], r["n_bytes"],
-                         r["features"], r["error"])
-            except Exception as exc:  # document-level containment
-                emit(url, error=f"{type(exc).__name__}: {exc}")
-        yield pd.DataFrame(out)
+def pdf_image_rows(url: str, html: bytes | None,
+                   max_images: int = 64) -> Iterator[dict]:
+    """Row function: (url, html) -> one row per embedded image, or one
+    diagnostic row when the document itself fails to parse."""
+    try:
+        for r in extract_pdf_images(html or b"", max_images=max_images):
+            yield dict(r, url=url)
+    except Exception as exc:  # document-level containment
+        yield {"url": url, "n_bytes": 0,
+               "error": f"{type(exc).__name__}: {exc}"}
 
 
 def extract_document_images(pages: DataFrame,
                             max_images: int = 64) -> DataFrame:
     """Vectorized embedded-image extraction over (url, html) rows -
-    the same mapInPandas shape as text extraction; a crawl pipeline
+    the same ``map_rows`` shape as text extraction; a crawl pipeline
     runs both branches off one scan."""
-    def body(batches):
-        return pdf_image_batches(batches, max_images=max_images)
-
-    return (pages.select("url", "html")
-            .mapInPandas(body, schema=PDF_IMAGES_SCHEMA))
+    return map_rows(pages.select("url", "html"),
+                    partial(pdf_image_rows, max_images=max_images),
+                    PDF_IMAGES_SCHEMA)

@@ -1,27 +1,34 @@
-"""B7: vectorized extraction - the ``mapInArrow`` batch kernel.
+"""B7: vectorized extraction, and the Arrow boundary of every Python kernel.
 
-Hosts every parsing kernel from ``livre_spark.pdf`` (SURVEY.md section 2.A).
-One Arrow batch in, one Arrow batch out; no per-row Python ever crosses the
-JVM boundary (the ``input_hint`` mandate).  Per-row failures are contained
-into the ``error`` column - a poisoned PDF must not kill the job.
+Hosts every parsing kernel from ``livre_spark.pdf`` (SURVEY.md section 2.A)
+and ``map_rows``, the one per-row Arrow map that every per-document Python
+kernel runs under: PDF text here, media, video and PDF-image features in
+``functions``, and the decode/crypt kernels of the registered queries.  One
+Arrow batch in, one Arrow batch out, built once from the rows the kernel
+yields; no per-row Python ever crosses the JVM boundary (the ``input_hint``
+mandate).  Per-row failures are contained into the ``error`` column - a
+poisoned PDF must not kill the job.
 
-``mapInArrow`` (not ``mapInPandas``): the kernel consumes raw bytes and
-emits strings/structs, so the pandas materialization on both edges is
+``mapInArrow`` (not ``mapInPandas``): the kernels consume raw bytes and
+emit strings/structs, so the pandas materialization on both edges is
 pure overhead - skipping it measured ~25% more docs/s at local[32]
 (6.8k -> 9.0k on the bench corpus in the same host window).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
+from functools import partial
 
 import pyarrow as pa
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, DoubleType, FloatType, IntegerType, LongType, MapType,
     StringType, StructField, StructType,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..pdf.api import extract_text, is_pdf
 
@@ -48,68 +55,53 @@ EXTRACTED_SCHEMA = StructType([
     StructField("info", MapType(StringType(), StringType())),
 ])
 
-_SPAN_PA = pa.struct([
-    ("page", pa.int32()), ("x", pa.float32()), ("y", pa.float32()),
-    ("off", pa.int64()), ("len", pa.int64()),
-])
 
-_OUT_PA = pa.schema([
-    ("url", pa.string()), ("text", pa.string()),
-    ("n_pages", pa.int32()), ("n_spans", pa.int32()),
-    ("spans", pa.list_(_SPAN_PA)), ("error", pa.string()),
-    ("parse_ms", pa.float64()), ("bytes_in", pa.int64()),
-    ("partition_id", pa.int32()),
-    ("info", pa.map_(pa.string(), pa.string())),
-])
+def map_rows(df: DataFrame, fn: Callable[..., Iterable[dict]],
+             schema: StructType | str) -> DataFrame:
+    """Run ``fn(*row)`` on every row of ``df`` under one ``mapInArrow``.
+
+    ``fn`` takes the row's columns in ``df``'s order and yields zero or
+    more output rows, each a dict keyed by ``schema``'s field names; a
+    missing key reads back as null.  ``schema`` is a StructType or a
+    DDL string.  This is the one Arrow boundary of every per-document
+    Python kernel.
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    body = partial(_row_batches, fn=fn, arrow_schema=to_arrow_schema(schema))
+    return df.mapInArrow(body, schema)
 
 
-def _extract_batches(batches: Iterator[pa.RecordBatch],
-                     cmap: bool = False,
-                     strip_inline: bool = False,
-                     with_info: bool = False) -> Iterator[pa.RecordBatch]:
-    """mapInArrow body: (url, html) batches -> EXTRACTED_SCHEMA batches."""
-    from pyspark import TaskContext
-
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
+def _row_batches(batches: Iterator[pa.RecordBatch],
+                 fn: Callable[..., Iterable[dict]],
+                 arrow_schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    """``map_rows``' mapInArrow body: one output batch per input batch,
+    built once from the rows ``fn`` yields."""
     for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        cols = {k: [] for k in ("url", "text", "n_pages", "n_spans",
-                                "spans", "error", "parse_ms", "bytes_in",
-                                "info")}
-        for url, html in zip(urls, htmls):
-            buf = bytes(html) if html is not None else b""
-            if not is_pdf(buf):
-                result = {"text": "", "spans": [], "n_pages": 0,
-                          "error": "NotAPdf", "parse_ms": 0.0,
-                          "info": None}
-            else:
-                result = extract_text(buf, cmap=cmap,
-                                      strip_inline=strip_inline,
-                                      with_info=with_info)
-            cols["url"].append(url)
-            cols["text"].append(result["text"])
-            cols["n_pages"].append(result["n_pages"])
-            cols["n_spans"].append(len(result["spans"]))
-            cols["spans"].append(result["spans"])
-            cols["error"].append(result["error"])
-            cols["parse_ms"].append(result["parse_ms"])
-            cols["bytes_in"].append(len(buf))
-            cols["info"].append(result.get("info"))
-        arrays = [
-            pa.array(cols["url"], pa.string()),
-            pa.array(cols["text"], pa.string()),
-            pa.array(cols["n_pages"], pa.int32()),
-            pa.array(cols["n_spans"], pa.int32()),
-            pa.array(cols["spans"], pa.list_(_SPAN_PA)),
-            pa.array(cols["error"], pa.string()),
-            pa.array(cols["parse_ms"], pa.float64()),
-            pa.array(cols["bytes_in"], pa.int64()),
-            pa.array([pid] * len(urls), pa.int32()),
-            pa.array(cols["info"], pa.map_(pa.string(), pa.string())),
-        ]
-        yield pa.RecordBatch.from_arrays(arrays, schema=_OUT_PA)
+        columns = [c.to_pylist() for c in batch.columns]
+        rows = [out for row in zip(*columns) for out in fn(*row)]
+        yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+
+
+def _extract_row(url: str, html: bytes | None, cmap: bool = False,
+                 strip_inline: bool = False,
+                 with_info: bool = False) -> Iterator[dict]:
+    """One (url, html) row -> one EXTRACTED_SCHEMA row.
+
+    ``partition_id`` is stamped here from the TaskContext (not with
+    ``F.spark_partition_id()``, which would write the column as
+    ``int not null`` and change the table's schema)."""
+    buf = html or b""
+    if is_pdf(buf):
+        result = extract_text(buf, cmap=cmap, strip_inline=strip_inline,
+                              with_info=with_info)
+    else:
+        result = {"text": "", "spans": [], "n_pages": 0,
+                  "error": "NotAPdf", "parse_ms": 0.0}
+    ctx = TaskContext.get()
+    result.update(url=url, n_spans=len(result["spans"]), bytes_in=len(buf),
+                  partition_id=ctx.partitionId() if ctx is not None else -1)
+    yield result
 
 
 def extract_documents(pages: DataFrame, cmap: bool = False,
@@ -126,13 +118,9 @@ def extract_documents(pages: DataFrame, cmap: bool = False,
     ``with_info=True`` populates the ``info`` metadata map (decrypted
     /Info strings).  The defaults stay reference-byte-identical.
     """
-    def body(batches):
-        return _extract_batches(batches, cmap=cmap,
-                                strip_inline=strip_inline,
-                                with_info=with_info)
-
-    return pages.select("url", "html").mapInArrow(
-        body, schema=EXTRACTED_SCHEMA)
+    row = partial(_extract_row, cmap=cmap, strip_inline=strip_inline,
+                  with_info=with_info)
+    return map_rows(pages.select("url", "html"), row, EXTRACTED_SCHEMA)
 
 
 def pdf_magic_filter(pages: DataFrame, html_col: str = "html") -> DataFrame:

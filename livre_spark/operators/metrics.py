@@ -1,9 +1,10 @@
 """B10/B11: per-partition lineage + metrics rows.
 
-Metrics are derived from the extraction output itself (the kernel stamps
-``partition_id`` via TaskContext), NOT from Spark accumulators - those are
-at-least-once under task retry, while a groupBy over the written rows is
-exactly-once by construction.
+Metrics are derived from the extraction output itself (the extraction row
+function stamps ``partition_id`` from the TaskContext inside ``map_rows``;
+the HTML branch uses ``spark_partition_id()``), NOT from Spark
+accumulators - those are at-least-once under task retry, while a groupBy
+over the written rows is exactly-once by construction.
 """
 
 from __future__ import annotations

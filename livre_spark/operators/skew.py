@@ -86,7 +86,7 @@ def ensure_scan_parallelism(df: DataFrame, *key_cols: str) -> DataFrame:
     A parquet file with a single row group yields exactly ONE scan task
     no matter what ``maxPartitionBytes`` asks for, so everything fused
     into the scan stage (explode + hash + partial aggregation, regex
-    chains, mapInPandas kernels) runs on one core.  When the scan
+    chains, ``map_rows`` kernels) runs on one core.  When the scan
     already produces at least ``defaultParallelism`` partitions (a real
     multi-file table at scale) this is a no-op; otherwise it pays one
     narrow shuffle of the projected input to restore parallelism.

@@ -245,18 +245,27 @@ class Document:
     # -- page API -------------------------------------------------------------
 
     def pages(self) -> list[Page]:
-        """DFS page enumeration with property inheritance (pages.rs:218-239)."""
-        return self._list_pages(self.catalog.pages)
+        """DFS page enumeration with property inheritance (pages.rs:218-239).
 
-    def _list_pages(self, node: PageTreeNode) -> list[Page]:
+        A /Kids cycle (a node listed under itself) raises
+        ``ParseError("PageTreeCycle")``; a subtree shared by several
+        parents (no cycle) is enumerated once per parent."""
+        return self._list_pages(self.catalog.pages, set())
+
+    def _list_pages(self, node: PageTreeNode,
+                    ancestors: set[tuple[int, int]]) -> list[Page]:
         result: list[Page] = []
         for kid in node.kids:
+            if kid.id in ancestors:
+                raise ParseError("PageTreeCycle", None, str(kid.id))
             element = self.build(kid, _page_element_parser)
             element.props.merge_with_parent(node.props)
             if isinstance(element, Page):
                 result.append(element)
             else:
-                result.extend(self._list_pages(element))
+                ancestors.add(kid.id)
+                result.extend(self._list_pages(element, ancestors))
+                ancestors.remove(kid.id)
         return result
 
     def info(self) -> dict[str, object] | None:

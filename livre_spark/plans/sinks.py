@@ -9,7 +9,8 @@ below, so swapping sinks is a constructor argument, not a rewrite.
 
 ParquetSink (runs here)
     Directory-per-table under a root; append = ``write.mode("append")``,
-    read-back = ``spark.read.parquet`` with absent-table -> None;
+    read-back = ``spark.read.parquet`` with absent-table -> None (a
+    missing path or an empty directory; any other read failure raises);
     ``documents_text`` is partitioned by ``run_id``, so ``read_run``
     opens one run's directory - O(run), not O(table).  An append to a
     ``documents_text`` that still holds top-level parquet files (the
@@ -49,7 +50,8 @@ import glob
 import os
 from typing import Protocol
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -93,10 +95,9 @@ class ParquetSink:
         # appended to by old and new writers is mixed-schema parquet;
         # without merging, which footer Spark samples decides whether
         # new columns appear.  Merging pins the union deterministically.
-        try:
-            df = (spark.read.option("mergeSchema", "true")
-                  .parquet(self.location(table)))
-        except Exception:
+        df = _parquet_or_none(spark.read.option("mergeSchema", "true"),
+                              self.location(table))
+        if df is None:
             return None
         if dict(df.dtypes).get("run_id", "string") != "string":
             # partition type inference read run_id=000123456789 as a number
@@ -108,13 +109,23 @@ class ParquetSink:
                  run_id: str) -> DataFrame | None:
         """One run's rows of documents_text: only its directory is opened;
         None when the run wrote no rows (so made no directory)."""
-        path = os.path.join(self.location(table), f"run_id={run_id}")
-        try:
-            # one write made these files: one schema, nothing to merge
-            return spark.read.parquet(path).withColumn("run_id",
-                                                       F.lit(run_id))
-        except Exception:
+        # one write made these files: one schema, nothing to merge
+        df = _parquet_or_none(spark.read, os.path.join(
+            self.location(table), f"run_id={run_id}"))
+        return None if df is None else df.withColumn("run_id", F.lit(run_id))
+
+
+def _parquet_or_none(reader: DataFrameReader, path: str) -> DataFrame | None:
+    """``reader.parquet(path)``, or None when there is no table to read:
+    the path is missing or an empty directory.  Every other failure
+    (an unreadable file, say) raises - read as "absent", it would make
+    the pipeline re-extract and append the whole corpus again."""
+    try:
+        return reader.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
             return None
+        raise
 
 
 def _refuse_unpartitioned(path: str) -> None:
@@ -155,26 +166,29 @@ class IcebergSink:
         # DataFrameWriterV2.append never creates the table; probe the
         # catalog explicitly so a TABLE_OR_VIEW_NOT_FOUND raised for
         # some OTHER relation in the plan (e.g. a joined view) cannot
-        # masquerade as "target missing" and trigger a spurious create
-        if self._table_exists(df.sparkSession, table):
-            writer.append()
-        else:
+        # masquerade as "target missing" and trigger a spurious create.
+        # A failed probe (catalog not configured / transient) falls
+        # through to append, whose error surfaces with full context
+        if self._table_exists(df.sparkSession, table) is False:
             writer.create()
+        else:
+            writer.append()
 
-    def _table_exists(self, spark: SparkSession, table: str) -> bool:
+    def _table_exists(self, spark: SparkSession, table: str) -> bool | None:
+        """The catalog's answer, or None when the probe itself fails."""
         try:
             return spark.catalog.tableExists(self.location(table))
         except Exception:
-            # catalog not configured / transient - fall through to
-            # append and let its error surface with full context
-            return True
+            return None
 
     def read_or_none(self, spark: SparkSession,
                      table: str) -> DataFrame | None:
-        try:
-            return spark.table(self.location(table))
-        except Exception:
+        # only a table the catalog reports is read, and its read errors
+        # raise; a failed probe reads as absent - the first append then
+        # raises on the same catalog
+        if not self._table_exists(spark, table):
             return None
+        return spark.table(self.location(table))
 
     def read_run(self, spark: SparkSession, table: str,
                  run_id: str) -> DataFrame | None:

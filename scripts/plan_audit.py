@@ -84,10 +84,9 @@ def main() -> None:
         "`localCheckpoint`).",
         "Invariants: **no cross joins** except the three deliberate cases",
         "explained at the bottom, **no row-at-a-time Python UDFs**",
-        "(`RowUDF!` would flag one), the pipeline extraction stage is",
-        "`MapInArrow` (the `extract_roundtrip` / `doc_info_crypt` oracle",
-        "queries' pandas stages build synthetic PDFs, not the",
-        "pipeline), small",
+        "(`RowUDF!` would flag one), **no `MapInPandas`**: every",
+        "per-document Python kernel (extraction, media, decode and crypt",
+        "queries) is one `MapInArrow` stage through `map_rows`, small",
         "dimensions broadcast.",
         "",
         "| query | cross join | broadcast | shuffles | python stage |"

@@ -326,20 +326,16 @@ def test_jpeg_progressive_through_decode_image():
 
 
 def test_unsupported_codec_rows_keep_header_dimensions():
-    """media_feature_batches: a lossless-JPEG (SOF3 boundary) row lands with
+    """media_feature_row: a lossless-JPEG (SOF3 boundary) row lands with
     width/height populated AND the error recorded."""
-    import pandas as pd
     from livre_spark.functions.jpeg import encode_jpeg
-    from livre_spark.functions.multimodal import media_feature_batches
+    from livre_spark.functions.multimodal import media_feature_row
     buf = bytearray(encode_jpeg(24, 17, _smooth_rgb(24, 17)))
     sof = bytes(buf).index(b"\xff\xc0")
     buf[sof + 1] = 0xC3
-    batch = pd.DataFrame({"media_id": [1], "kind": ["image"],
-                          "content": [bytes(buf)]})
-    (out,) = list(media_feature_batches(iter([batch]), fake=False))
-    row = out.iloc[0]
+    (row,) = media_feature_row(1, "image", bytes(buf), fake=False)
     assert (row["width"], row["height"]) == (24, 17)
-    assert row["features"] is None
+    assert row.get("features") is None
     assert "SOF3" in row["error"]
 
 
@@ -510,23 +506,19 @@ def test_gif_frames_compositing():
 
 
 def test_video_frame_features_batches():
-    import pandas as pd
     from livre_spark.functions.gif import encode_gif_animated
-    from livre_spark.functions.multimodal import video_frame_batches
+    from livre_spark.functions.multimodal import video_frame_row
     palette = bytes([i * 85 for i in range(4) for _ in range(3)])[:12]
     sw, sh = 5, 4
     frames = [(0, 0, sw, sh, bytes([f % 4] * (sw * sh)), None)
               for f in range(6)]
     buf = encode_gif_animated(sw, sh, palette, frames)
-    batch = pd.DataFrame({"media_id": [1, 2],
-                          "content": [buf, b"not a gif"]})
-    (out,) = list(video_frame_batches(iter([batch]), sample_frames=3))
-    ok = out.iloc[0]
+    (ok,) = video_frame_row(1, buf, sample_frames=3)
     assert (ok["n_frames"], ok["width"], ok["height"], ok["sampled"]) \
         == (6, sw, sh, 3)
     assert abs(sum(ok["features"]) - 1.0) < 1e-6
-    bad = out.iloc[1]
-    assert bad["features"] is None and "GifError" in bad["error"]
+    (bad,) = video_frame_row(2, b"not a gif", sample_frames=3)
+    assert bad.get("features") is None and "GifError" in bad["error"]
 
 
 def test_resize_nearest_exact_upscale():

@@ -111,3 +111,14 @@ def test_spark_document_images(spark):
     assert got["u1"]["name"] == "Im1" and got["u1"]["kind"] == "jpeg"
     assert got["u1"]["features"] == _expected_features(px)
     assert got["u2"]["name"] is None and got["u2"]["error"] is not None
+
+
+def test_spark_document_without_images_yields_no_rows(spark):
+    """An image-free PDF makes zero output rows; a batch of only such
+    documents is an empty batch, not a failed task."""
+    from livre_spark.functions.pdfimages import extract_document_images
+
+    pages = spark.createDataFrame(
+        [("u1", bytearray(build_pdf([b"BT (x) Tj ET"])))],
+        "url string, html binary")
+    assert extract_document_images(pages).collect() == []

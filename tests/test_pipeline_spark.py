@@ -336,3 +336,52 @@ def test_read_back_opens_only_this_run(spark, corpus_path, tmp_path):
     assert os.listdir(os.path.join(
         out, "documents_text", f"run_id={first['run_id']}"))
     assert info["n_docs"] == first["n_docs"] > 0
+
+
+def _text_files(out):
+    root = os.path.join(out, "documents_text")
+    return {os.path.join(d, f): os.path.getsize(os.path.join(d, f))
+            for d, _, fs in os.walk(root) for f in fs}
+
+
+def test_unreadable_manifest_raises_instead_of_reextracting(spark,
+                                                            corpus_path,
+                                                            tmp_path):
+    """A manifest the sink cannot read is not an absent manifest: read as
+    absent it would re-extract and append the whole corpus a second
+    time.  The run raises and documents_text is left as it was."""
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    run_pipeline(spark, corpus_path, out, checkpoint_dir=ckpt)
+    before = _text_files(out)
+    with open(os.path.join(ckpt, "done_urls", "junk.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="junk.parquet"):
+        run_pipeline(spark, corpus_path, out, checkpoint_dir=ckpt)
+    assert _text_files(out) == before
+
+
+def test_documents_text_written_schema(spark, corpus_path, tmp_path):
+    """The schema Spark writes into documents_text's parquet footers,
+    nullability included: every column nullable, ``partition_id`` too
+    (stamped in the kernel, not by ``spark_partition_id()``, which is
+    ``int not null``)."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    out = str(tmp_path / "out")
+    run_pipeline(spark, corpus_path, out)
+    (part, *_) = glob.glob(os.path.join(out, "documents_text", "*",
+                                        "*.parquet"))
+    meta = pq.read_schema(part).metadata[
+        b"org.apache.spark.sql.parquet.row.metadata"]
+    written = StructType.fromJson(json.loads(meta))
+    assert written == StructType.fromDDL(
+        "url string, text string, n_pages int, n_spans int,"
+        " spans array<struct<page: int, x: float, y: float, off: bigint,"
+        " len: bigint>>, error string, parse_ms double, bytes_in bigint,"
+        " partition_id int, info map<string, string>")
+    assert all(f.nullable for f in written.fields)

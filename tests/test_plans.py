@@ -38,20 +38,16 @@ def test_column_pruning_reaches_scan(spark):
 
 
 def test_no_python_row_udfs_in_relational_queries(spark):
-    """B19 discipline: no BatchEvalPython (row UDF) anywhere; Python
-    runs only in vectorized Arrow stages.  mapInPandas only in the
-    extraction + multimodal + crypt-kernel queries (doc_info_crypt builds
-    encrypted PDFs per row); the similarity and dedup queries use numpy
-    kernels under mapInArrow / grouped applyInArrow instead."""
+    """B19 discipline: no BatchEvalPython (row UDF) and no MapInPandas in
+    any registered query; Python runs only in Arrow stages.  The
+    per-document kernels (extraction, multimodal, decode and crypt
+    queries) go through ``map_rows``' one mapInArrow; the similarity and
+    dedup queries use numpy kernels under mapInArrow / grouped
+    applyInArrow."""
     for name, fn in em.queries().items():
         plan = _plan(fn(spark, SF_DIR))
         assert "BatchEvalPython" not in plan, name
-        if name not in ("extract_roundtrip", "multimodal_features",
-                        "multimodal_real_decode", "webp_real_decode",
-                        "vp8_real_decode", "jpeg_arith_decode",
-                        "doc_info_crypt", "pdf_images",
-                        "audio_features"):
-            assert "MapInPandas" not in plan, name
+        assert "MapInPandas" not in plan, name
 
 
 @pytest.mark.parametrize("name", ["topk_orders", "sim_topk",

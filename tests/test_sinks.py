@@ -3,6 +3,8 @@ everything up to the actual ``writeTo`` network call is exercised with
 stub writer/catalog objects; the only uncovered line is the Spark
 commit itself (which is Iceberg-runtime territory, not ours)."""
 
+import pytest
+
 from livre_spark.plans.sinks import IcebergSink, ParquetSink
 
 
@@ -96,3 +98,19 @@ def test_append_catalog_probe_failure_falls_through_to_append():
 def test_parquet_sink_location_joins_root():
     sink = ParquetSink("/data/out")
     assert sink.location("documents_text") == "/data/out/documents_text"
+
+
+def test_iceberg_read_or_none_probes_the_catalog():
+    """A table the catalog does not report (or a failed probe) reads as
+    None without a read; a reported table's read error surfaces instead
+    of passing for "absent"."""
+    class Spark(_StubSpark):
+        def table(self, name):
+            raise RuntimeError(f"cannot read {name}")
+
+    ice = IcebergSink("lake.crawl")
+    assert ice.read_or_none(Spark(exists=False), "done_urls") is None
+    assert ice.read_or_none(Spark(exists=RuntimeError("no catalog")),
+                            "done_urls") is None
+    with pytest.raises(RuntimeError, match="lake.crawl.done_urls"):
+        ice.read_or_none(Spark(exists=True), "done_urls")

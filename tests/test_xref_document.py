@@ -247,3 +247,47 @@ def test_objstm_extends_cycle_contained():
     pdf, _ = b.serialize_xref_stream(catalog_id, objstm_members=members)
     r = extract_text(pdf)
     assert r["error"] == "MissingCompressedObject"
+
+
+def _page_tree_pdf(kids_of):
+    """A document whose /Pages root is object ``root`` and whose page
+    tree nodes have the given /Kids (``kids_of``: name -> kid names;
+    a name without an entry is a leaf page)."""
+    from livre_spark.pdf.genpdf import PdfBuilder
+
+    b = PdfBuilder()
+    catalog_id = b.reserve()
+    ids = {name: b.reserve() for name in ["root", *sorted(
+        {k for kids in kids_of.values() for k in kids} - {"root"})]}
+    content_id = b.add_stream(b"", b"BT /F1 9 Tf 10 10 Td (p) Tj ET")
+    b.set(catalog_id, b"<</Type/Catalog/Pages %d 0 R>>" % ids["root"])
+    for name, oid in ids.items():
+        if name in kids_of:
+            refs = b" ".join(b"%d 0 R" % ids[k] for k in kids_of[name])
+            b.set(oid, b"<</Type/Pages/Kids[" + refs + b"]>>")
+        else:
+            b.set(oid, b"<</Type/Page/Contents %d 0 R>>" % content_id)
+    pdf, _ = b.serialize_plain(catalog_id)
+    return pdf
+
+
+@pytest.mark.parametrize("kids_of", [
+    {"root": ["page", "root"]},                       # self-cycle
+    {"root": ["a"], "a": ["page", "b"], "b": ["a"]},  # 2-cycle
+])
+def test_page_tree_cycle_is_a_stable_error(kids_of):
+    """A /Kids cycle is reported as PageTreeCycle, not as the RecursionError
+    an unbounded walk hits after a thousand levels."""
+    from livre_spark.pdf.api import extract_text
+
+    pdf = _page_tree_pdf(kids_of)
+    with pytest.raises(ParseError, match="PageTreeCycle"):
+        Document(pdf).pages()
+    assert extract_text(pdf)["error"] == "PageTreeCycle"
+
+
+def test_shared_page_subtree_enumerates_once_per_parent():
+    """No cycle: a subtree listed under two parents is walked under each."""
+    pdf = _page_tree_pdf({"root": ["a", "b"], "a": ["shared"],
+                          "b": ["shared"], "shared": ["page"]})
+    assert len(Document(pdf).pages()) == 2
